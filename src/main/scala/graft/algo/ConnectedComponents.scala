@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** One large-star round: every neighbor v > u links to
-    * m = min(Γ(u) ∪ {u}).
+    * m = min(Γ(u) ∪ {u}). Exposed, like [[smallStar]], for PlanSpec.
     */
-  private def largeStar(e: DataFrame): DataFrame = {
+  private[graft] def largeStar(e: DataFrame): DataFrame = {
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val mins = sym.groupBy(col("src"))
       .agg(min(col("dst")).as("mn"))
@@ -37,7 +37,7 @@ object ConnectedComponents {
   /** One small-star round: orient u > v; u and every smaller neighbor
     * link to m = min(Γ⁻(u) ∪ {u}).
     */
-  private def smallStar(e: DataFrame): DataFrame = {
+  private[graft] def smallStar(e: DataFrame): DataFrame = {
     val or = e.select(
       greatest(col("src"), col("dst")).as("src"),
       least(col("src"), col("dst")).as("dst"))
@@ -69,38 +69,31 @@ object ConnectedComponents {
           maxIter: Int = 50,
           ckpt: Option[Superstep] = None): DataFrame = Superstep.withoutAQE(spark) {
 
-    val resumed = ckpt.flatMap(c => c.latest().map(step => (step, c.load(step))))
-    // no upfront distinct/repartition: the first large-star round
-    // shuffles by src anyway and small-star's distinct restores set
-    // semantics — two edge-scale shuffles saved
-    // freshCheckpoint, not bare localCheckpoint: each star round
-    // self-joins its input, so inherited origin stats would square
-    // per round (see CheckpointStats) — the exact planning blowup
-    // diagnosed for the refine loop applies here from round ~25 on
-    var e = Superstep.freshCheckpoint(
-      resumed.map(_._2).getOrElse(
+    // the start state's checksum is taken by the first round
+    var prevSum: Option[(Long, Long)] = None
+    val (e, _, converged) = Superstep.iterate(spark,
+      // no upfront distinct/repartition: the first large-star round
+      // shuffles by src anyway and small-star's distinct restores set
+      // semantics — two edge-scale shuffles saved
+      // freshCheckpoint, not bare localCheckpoint: each star round
+      // self-joins its input, so inherited origin stats would square
+      // per round (see CheckpointStats) — the exact planning blowup
+      // diagnosed for the refine loop applies here from round ~25 on
+      Superstep.freshCheckpoint(
         edges.select(col("src"), col("dst"))
-          .filter(col("src") =!= col("dst"))), eager = true)
-
-    var step = resumed.map(_._1).getOrElse(0)
-    var prevSum = checksum(e)
-    var converged = false
-    val gc = new Superstep.CheckpointGC(spark)
-    while (step < maxIter && !converged) {
-      e = Superstep.freshCheckpoint(
-        smallStar(largeStar(e)), eager = false) // lazy: checksum materializes
-      step += 1
-      val s = checksum(e)
-      gc.tick()
-      converged = s == prevSum
-      prevSum = s
-      ckpt.foreach { c =>
-        if (step % c.every == 0 || converged)
-          e = c.save(step, e, Map("edges" -> s._1.toDouble))
-      }
+          .filter(col("src") =!= col("dst")), eager = true),
+      maxIter, ckpt = ckpt) { cur =>
+      val prev = prevSum.getOrElse(checksum(cur))
+      val next = Superstep.freshCheckpoint(
+        smallStar(largeStar(cur)), eager = false) // lazy: checksum materializes
+      val s = checksum(next)
+      prevSum = Some(s)
+      Superstep.Step(next, s == prev, Map("edges" -> s._1.toDouble))
     }
+    // a half-converged star forest splits components: never return it
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge within $maxIter rounds — raise maxIter")
 
-    gc.close()
     // star edges: (member, root); roots and isolated vertices map to self
     val members = e.select(col("src").as("id"), col("dst").as("component"))
     val roots = e.select(col("dst").as("id")).distinct()

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * PageRank superstep exchange), one histogram aggregation, one skinny
   * window + max. Rounds to convergence are bounded by the graph's
   * peeling depth in practice (single digits on power-law graphs);
-  * `freshCheckpoint` + `CheckpointGC` keep planning and storage flat.
+  * `freshCheckpoint` + [[Superstep.iterate]] keep planning and storage flat.
   */
 object Coreness {
 
@@ -68,28 +68,23 @@ object Coreness {
         .filter(col("src") =!= col("dst"))
         .repartition(numPartitions, col("src")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      e.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")), eager = true)
-    var changed = 1L
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (changed > 0 && iter < maxIter) {
+    val (state, _, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        e.groupBy(col("src").as("id")).agg(count(lit(1)).as("c")), eager = true),
+      maxIter) { cur =>
       // neighbor-value histogram: (vertex, value) → count. Equal values
       // collapse map-side, so the exchange is ≤ one row per (vertex,
       // distinct neighbor value) — far below edge scale on dense spots.
       // Then cnt≥(c) over the ≤ kmax+1 distinct values and the h-index
       // identity h = max(min(c, cnt≥(c))). Shape pinned by PlanSpec.
-      val next = Superstep.freshCheckpoint(hIndexRound(e, state),
+      val next = Superstep.freshCheckpoint(hIndexRound(e, cur),
         eager = false)
-      changed = next.join(state.withColumnRenamed("c", "prev"), Seq("id"))
+      val changed = next.join(cur.withColumnRenamed("c", "prev"), Seq("id"))
         .filter(col("c") =!= col("prev")).count()
-      gc.tick()
-      state = next; iter += 1
+      Superstep.Step(next, changed == 0)
     }
-    require(changed == 0,
+    require(converged,
       s"coreness refinement did not converge within $maxIter rounds")
-    gc.close()
     state.select(col("id"), col("c").as("coreness"))
   }
 }

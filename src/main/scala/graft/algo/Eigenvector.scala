@@ -55,15 +55,11 @@ object Eigenvector {
       e.select(col("src").as("id")).distinct()
         .repartition(numPartitions, col("id")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"), lit(1.0).as("x")), eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val (state, iters, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(verts.select(col("id"), lit(1.0).as("x")), eager = true),
+      maxIter, keep = 6) { st =>
       val inSum = e
-        .join(state.hint("shuffle_hash"), e("src") === state("id"))
+        .join(st.hint("shuffle_hash"), e("src") === st("id"))
         .groupBy(e("dst").as("id")).agg(sum(col("w") * col("x")).as("xraw"))
       val xr = Superstep.freshCheckpoint(
         verts.join(inSum, Seq("id"), "left")
@@ -73,20 +69,16 @@ object Eigenvector {
       val n = if (n0 > 0) n0 else 1.0 // all-zero vector: leave it at zero
       val next = Superstep.freshCheckpoint(
         xr.select(col("id"), (col("xraw") / n).as("x")), eager = false)
-      if (tol > 0) {
+      if (tol <= 0) Superstep.Step(next)
+      else {
         val delta = next
-          .join(state.select(col("id"), col("x").as("x0")), Seq("id"))
+          .join(st.select(col("id"), col("x").as("x0")), Seq("id"))
           .agg(sum(abs(col("x") - col("x0")))).collect()(0).getDouble(0)
-        converged = delta < tol
+        Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
-      state = next
-      gc.tick()
-      iter += 1
     }
-    if (tol <= 0) state.count() // materialize before the sweep frees xr
-    gc.close(keepLatest = 1)
     Superstep.freeCheckpoint(e)
     Superstep.freeCheckpoint(verts)
-    Result(state.select(col("id"), col("x").as("eig")), iter, converged)
+    Result(state.select(col("id"), col("x").as("eig")), iters, converged)
   }
 }

@@ -53,38 +53,39 @@ object Fiedler {
 
     // deterministic non-constant seed: the sawtooth id arithmetic
     // (a degree seed would fuse automorphic halves, the PIC lesson)
-    var x = Superstep.freshCheckpoint(
-      deg.select(col("id"), col("d"),
-        (pmod(col("id"), lit(16L)) + lit(1L)).cast("double").as("x")),
-      eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
-    def centerNormalize(st: DataFrame): DataFrame = {
+    // the mean-deflated state (a lazy checkpoint the norm action
+    // materializes) and its L2 norm
+    def center(st: DataFrame): (DataFrame, Double) = {
       val mu = st.agg(sum(col("x"))).first().getDouble(0) / n
       val cen = st.select(col("id"), col("d"), (col("x") - mu).as("x"))
         .localCheckpoint(false)
       val nrm = cen.agg(sqrt(sum(col("x") * col("x")))).first().getDouble(0)
       require(nrm > 0, "seed collapsed onto the constant vector")
-      cen.select(col("id"), col("d"), (col("x") / nrm).as("x"))
+      (cen, nrm)
     }
 
-    for (_ <- 1 to iters) {
-      val y = centerNormalize(x)
+    val (x, _, _) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        deg.select(col("id"), col("d"),
+          (pmod(col("id"), lit(16L)) + lit(1L)).cast("double").as("x")),
+        eager = true),
+      iters, keep = 4) { cur =>
+      val (cen, nrm) = center(cur)
+      val y = cen.select(col("id"), col("d"), (col("x") / nrm).as("x"))
       val nbr = e
         .join(y.select(col("id").as("src"), col("x")).hint("shuffle_hash"),
           Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("x")).as("s"))
-      val next = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         y.join(nbr.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"), col("d"),
             ((lit(c.toDouble) - col("d")) * col("x") +
               coalesce(col("s"), lit(0.0))).as("x"))
-          .repartition(numPartitions, col("id")), eager = true)
-      x = next
-      gc.tick()
+          .repartition(numPartitions, col("id")), eager = true))
     }
+    val (cen, nrm) = center(x)
     val fin = Superstep.freshCheckpoint(
-      centerNormalize(x).select(col("id"), col("x").as("f")), eager = true)
+      cen.select(col("id"), (col("x") / nrm).as("f")), eager = true)
 
     // Rayleigh quotient over canonical pairs (each undirected edge once)
     val lambda2 = e.filter(col("src") < col("dst"))
@@ -95,8 +96,7 @@ object Fiedler {
       .agg(sum((col("fu") - col("fv")) * (col("fu") - col("fv"))))
       .first().getDouble(0)
 
-    gc.close(keepLatest = 1)
-    Seq(e, deg).foreach(Superstep.freeCheckpoint)
+    Seq(e, deg, x, cen).foreach(Superstep.freeCheckpoint)
     Result(fin, lambda2, c)
   }
 }

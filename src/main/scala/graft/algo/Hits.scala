@@ -49,19 +49,16 @@ object Hits {
         .unionAll(eSrc.select(col("dst").as("id"))).distinct()
         .repartition(numPartitions, col("id")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark, keep = 8)
-    var iter = 0
-    var converged = false
     def l2(df: DataFrame, c: String): Double = {
       val n = df.agg(sqrt(sum(col(c) * col(c)))).collect()(0).getDouble(0)
       if (n > 0) n else 1.0 // all-zero vector: leave it at zero
     }
-    while (iter < maxIter && !converged) {
+    val (state, iters, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true),
+      maxIter, keep = 8) { st =>
       val inSum = eSrc
-        .join(state.hint("shuffle_hash"), eSrc("src") === state("id"))
+        .join(st.hint("shuffle_hash"), eSrc("src") === st("id"))
         .groupBy(eSrc("dst").as("id")).agg(sum(col("h")).as("araw"))
       val ar = Superstep.freshCheckpoint(
         verts.join(inSum, Seq("id"), "left")
@@ -77,30 +74,24 @@ object Hits {
           .select(col("id"), coalesce(col("hraw"), lit(0.0)).as("hraw")),
         eager = false)
       val nh = l2(hr, "hraw") // materializes hr
+      // lazy: the Δ check (tol > 0) or the next round materializes it
       val next = Superstep.freshCheckpoint(
         hr.select(col("id"), (col("hraw") / nh).as("h"))
           .join(auth, Seq("id")), eager = false)
-      if (tol > 0) {
+      if (tol <= 0) Superstep.Step(next)
+      else {
         val delta = next
-          .join(state.select(col("id"), col("h").as("h0"), col("a").as("a0")),
+          .join(st.select(col("id"), col("h").as("h0"), col("a").as("a0")),
             Seq("id"))
           .agg(sum(abs(col("h") - col("h0")) + abs(col("a") - col("a0"))))
           .collect()(0).getDouble(0)
-        converged = delta < tol
+        Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
-      state = next
-      gc.tick()
-      iter += 1
     }
-    // tol == 0 leaves the final checkpoint lazy and still referencing
-    // this round's ar/hr frames — materialize it BEFORE the sweep
-    // frees them (with tol > 0 the Δ action already did)
-    if (tol <= 0) state.count()
-    gc.close(keepLatest = 1)
     Superstep.freeCheckpoint(eSrc)
     Superstep.freeCheckpoint(eDst)
     Superstep.freeCheckpoint(verts)
     Result(state.select(col("id"), col("h").as("hub"), col("a").as("auth")),
-      iter, converged)
+      iters, converged)
   }
 }

@@ -60,24 +60,21 @@ object HittingTime {
           coalesce(col("isT"), lit(false)).as("isT"))
         .repartition(numPartitions, col("id")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"), lit(0.0).as("h")), eager = true)
-    val gc = new Superstep.CheckpointGC(spark, keep = 3)
-    for (_ <- 1 to iters) {
-      val sums = state.join(e.hint("shuffle_hash"), state("id") === e("src"))
+    val (state, _, _) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(verts.select(col("id"), lit(0.0).as("h")), eager = true),
+      iters, keep = 3) { cur =>
+      val sums = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .groupBy(e("dst").as("id")).agg(sum(col("h")).as("nh"))
-      state = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         verts.join(sums.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"),
             when(col("isT"), 0.0) // degree-0 non-targets never enter `verts`
               .otherwise(lit(1.0) + coalesce(col("nh"), lit(0.0)) / col("deg"))
-              .as("h")), eager = true)
-      gc.tick()
+              .as("h")), eager = true))
     }
     val out = Superstep.freshCheckpoint(
       state.withColumn("h", round(col("h"), 6)), eager = true)
-    gc.close(keepLatest = 1)
-    Seq(e, tg, verts).foreach(Superstep.freeCheckpoint)
+    Seq(e, tg, verts, state).foreach(Superstep.freeCheckpoint)
     out
   }
 
@@ -123,25 +120,22 @@ object HittingTime {
     require(verts.filter(col("isA") && col("isB")).isEmpty,
       "positive and negative target sets must be disjoint")
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"),
-        when(col("isA"), 1.0).otherwise(0.0).as("p")), eager = true)
-    val gc = new Superstep.CheckpointGC(spark, keep = 3)
-    for (_ <- 1 to iters) {
-      val sums = state.join(e.hint("shuffle_hash"), state("id") === e("src"))
+    val (state, _, _) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(verts.select(col("id"),
+        when(col("isA"), 1.0).otherwise(0.0).as("p")), eager = true),
+      iters, keep = 3) { cur =>
+      val sums = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .groupBy(e("dst").as("id")).agg(sum(col("p")).as("np"))
-      state = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         verts.join(sums.hint("shuffle_hash"), Seq("id"), "left")
           .select(col("id"),
             when(col("isA"), 1.0).when(col("isB"), 0.0)
               .otherwise(coalesce(col("np"), lit(0.0)) / col("deg"))
-              .as("p")), eager = true)
-      gc.tick()
+              .as("p")), eager = true))
     }
     val out = Superstep.freshCheckpoint(
       state.withColumn("p", round(col("p"), 6)), eager = true)
-    gc.close(keepLatest = 1)
-    Seq(e, verts).foreach(Superstep.freeCheckpoint)
+    Seq(e, verts, state).foreach(Superstep.freeCheckpoint)
     out
   }
 

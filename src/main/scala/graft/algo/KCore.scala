@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * alive set — the same exchange budget as a CC star round. Rounds
   * are bounded by the peeling depth (≤ max coreness; single digits on
   * power-law graphs), each round's edge set shrinks monotonically,
-  * and per-round `freshCheckpoint` + `CheckpointGC` keep planning and
+  * and per-round `freshCheckpoint` + [[Superstep.iterate]] keep planning and
   * storage flat exactly as in [[ConnectedComponents]].
   */
 object KCore {
@@ -34,32 +34,27 @@ object KCore {
           numPartitions: Int = 32,
           maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
 
-    var e = Superstep.freshCheckpoint(
+    val start = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")), eager = true)
-    var size = e.count()
-    var changed = true
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (changed && iter < maxIter) {
-      val alive = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("dg"))
+    var size = start.count()
+    val (e, _, stable) = Superstep.iterate(spark, start, maxIter) { cur =>
+      val alive = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select(col("id"))
       val next = Superstep.freshCheckpoint(
-        e.join(alive.select(col("id").as("src")).hint("shuffle_hash"),
+        cur.join(alive.select(col("id").as("src")).hint("shuffle_hash"),
             Seq("src"), "left_semi")
           .join(alive.select(col("id").as("dst")).hint("shuffle_hash"),
             Seq("dst"), "left_semi"), eager = false)
       val nextSize = next.count() // materializes the lazy checkpoint
-      gc.tick()
-      changed = nextSize != size
-      e = next; size = nextSize; iter += 1
+      val same = nextSize == size
+      size = nextSize
+      Superstep.Step(next, same)
     }
     // a silently truncated peel would present sub-k degrees as the
     // k-core — fail loudly instead (sibling algos report `converged`)
-    require(!changed,
+    require(stable,
       s"k-core peeling did not stabilize within $maxIter rounds — raise maxIter")
-    gc.close()
     e.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_deg"))
   }
 
@@ -85,31 +80,26 @@ object KCore {
             numPartitions: Int = 32,
             maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
 
-    var e = Superstep.freshCheckpoint(
+    val start = Superstep.freshCheckpoint(
       symWeighted.select(col("src"), col("dst"), col("weight"))
         .filter(col("src") =!= col("dst")), eager = true)
-    var size = e.count()
-    var changed = true
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (changed && iter < maxIter) {
-      val alive = e.groupBy(col("src").as("id"))
+    var size = start.count()
+    val (e, _, stable) = Superstep.iterate(spark, start, maxIter) { cur =>
+      val alive = cur.groupBy(col("src").as("id"))
         .agg(sum(col("weight")).as("st"))
         .filter(col("st") >= s).select(col("id"))
       val next = Superstep.freshCheckpoint(
-        e.join(alive.select(col("id").as("src")).hint("shuffle_hash"),
+        cur.join(alive.select(col("id").as("src")).hint("shuffle_hash"),
             Seq("src"), "left_semi")
           .join(alive.select(col("id").as("dst")).hint("shuffle_hash"),
             Seq("dst"), "left_semi"), eager = false)
       val nextSize = next.count()
-      gc.tick()
-      changed = nextSize != size
-      e = next; size = nextSize; iter += 1
+      val same = nextSize == size
+      size = nextSize
+      Superstep.Step(next, same)
     }
-    require(!changed,
+    require(stable,
       s"s-core peeling did not stabilize within $maxIter rounds — raise maxIter")
-    gc.close()
     e.groupBy(col("src").as("id")).agg(sum(col("weight")).as("core_strength"))
   }
 }

@@ -37,34 +37,27 @@ object Katz {
       e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
         .distinct().repartition(numPartitions, col("id")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"), lit(beta).as("k")), eager = true)
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    val (state, iters, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(verts.select(col("id"), lit(beta).as("k")), eager = true),
+      maxIter, keep = 6) { st =>
       val inSum = e
-        .join(state.hint("shuffle_hash"), e("src") === state("id"))
+        .join(st.hint("shuffle_hash"), e("src") === st("id"))
         .groupBy(e("dst").as("id")).agg(sum(col("k")).as("ksum"))
       val next = Superstep.freshCheckpoint(
         verts.join(inSum, Seq("id"), "left")
           .select(col("id"),
             (lit(alpha) * coalesce(col("ksum"), lit(0.0)) + lit(beta)).as("k")),
         eager = tol <= 0)
-      if (tol > 0) {
+      if (tol <= 0) Superstep.Step(next)
+      else {
         val delta = next
-          .join(state.select(col("id"), col("k").as("k0")), Seq("id"))
+          .join(st.select(col("id"), col("k").as("k0")), Seq("id"))
           .agg(sum(abs(col("k") - col("k0")))).collect()(0).getDouble(0)
-        converged = delta < tol
+        Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
-      state = next
-      gc.tick()
-      iter += 1
     }
-    if (tol <= 0) state.count() // materialize before the sweep
-    gc.close(keepLatest = 1)
     Superstep.freeCheckpoint(e)
     Superstep.freeCheckpoint(verts)
-    Result(state, iter, converged)
+    Result(state, iters, converged)
   }
 }

@@ -19,6 +19,28 @@ object LabelPropagation {
 
   final case class Result(labels: DataFrame, iterations: Int, converged: Boolean)
 
+  /** One synchronous vote round over edges hash-partitioned on `src`
+    * and (id, label) state hash-partitioned on `id`: (id, label, prev)
+    * with `label` the new label. Exposed for PlanSpec.
+    */
+  private[graft] def vote(e: DataFrame, labels: DataFrame,
+                          weightCol: Option[String]): DataFrame = {
+    // SHUFFLE_HASH hints: SMJ would re-sort the cached co-partitioned
+    // edge table and the skinny state EVERY superstep (cf. PageRank)
+    val votes = e
+      .join(labels.select(col("id").as("src"), col("label")).hint("shuffle_hash"),
+        Seq("src"))
+      .groupBy(col("dst"), col("label"))
+      .agg(weightCol.map(w => sum(col(w)))
+        .getOrElse(count(lit(1))).as("cnt"))
+    val winner = votes.groupBy(col("dst").as("id"))
+      .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("newLabel"))
+    labels.join(winner.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("newLabel"), col("label")).as("label"),
+        col("label").as("prev"))
+  }
+
   /** @param symEdges symmetrized undirected edges (both directions present)
     * @param vertices optional (id, …) vertex table: ids with no incident
     *   edge still get a (self-)community, matching the reference's
@@ -46,55 +68,28 @@ object LabelPropagation {
       .repartition(numPartitions, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val resumed = ckpt.flatMap(c => c.latest().map(step => (step, c.load(step))))
-    val endpointIds = e.select(col("src").as("id")).distinct()
-    val allIds = vertices
-      .map(v => endpointIds.unionByName(v.select(col("id"))).distinct())
-      .getOrElse(endpointIds)
-    var labels = resumed.map(_._2).getOrElse(
-      allIds
-        .select(col("id"), col("id").as("label"))
-        .repartition(numPartitions, col("id")))
-      .localCheckpoint(true)
-
-    var step = resumed.map(_._1).getOrElse(0)
-    var converged = false
-    val gc = new Superstep.CheckpointGC(spark)
-    while (step < maxIter && !converged) {
-      // SHUFFLE_HASH hints: SMJ would re-sort the cached co-partitioned
-      // edge table and the skinny state EVERY superstep (cf. PageRank)
-      val votes = e
-        .join(labels.select(col("id").as("src"), col("label")).hint("shuffle_hash"),
-          Seq("src"))
-        .groupBy(col("dst"), col("label"))
-        .agg(weightCol.map(w => sum(col(w)))
-          .getOrElse(count(lit(1))).as("cnt"))
-      val winner = votes.groupBy(col("dst").as("id"))
-        .agg(max_by(col("label"), struct(col("cnt"), -col("label"))).as("newLabel"))
-
-      val next = labels.join(winner.hint("shuffle_hash"), Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("newLabel"), col("label")).as("label"),
-          col("label").as("prev"))
+    val (labels, steps, converged) = Superstep.iterate(spark, {
+        val endpointIds = e.select(col("src").as("id")).distinct()
+        val allIds = vertices
+          .map(v => endpointIds.unionByName(v.select(col("id"))).distinct())
+          .getOrElse(endpointIds)
+        allIds
+          .select(col("id"), col("id").as("label"))
+          .repartition(numPartitions, col("id"))
+          .localCheckpoint(true)
+      }, maxIter, ckpt = ckpt) { cur =>
+      val next = vote(e, cur, weightCol)
         .localCheckpoint(false) // lazy: the changes count materializes it
-
       val changes = next.filter(col("label") =!= col("prev")).count()
-      gc.tick()
-      labels = next.select("id", "label")
-      step += 1
-      converged = changes == 0L
-      ckpt.foreach { c =>
-        if (step % c.every == 0 || converged)
-          labels = c.save(step, labels, Map("changes" -> changes.toDouble))
-      }
+      Superstep.Step(next.select("id", "label"), changes == 0L,
+        Map("changes" -> changes.toDouble))
     }
     e.unpersist()
-    gc.close()
 
     // canonicalize: community id = min member vertex id
     val canon = labels.groupBy(col("label")).agg(min(col("id")).as("community"))
     val out = labels.join(canon, Seq("label")).select(col("id"), col("community"))
-    Result(out, step, converged)
+    Result(out, steps, converged)
   }
 
   /** Seeded (semi-supervised) label spreading — Zhu–Ghahramani-style
@@ -126,18 +121,15 @@ object LabelPropagation {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col("id"), col("label"))
 
-    var labels = e.select(col("src").as("id")).distinct()
-      .join(sd.withColumnRenamed("label", "seed_label"), Seq("id"), "left")
-      .select(col("id"), col("seed_label"),
-        col("seed_label").as("label"))
-      .repartition(numPartitions, col("id"))
-      .localCheckpoint(true)
-
-    val gc = new Superstep.CheckpointGC(spark)
-    var r = 0
-    while (r < rounds) {
+    val (labels, _, _) = Superstep.iterate(spark,
+      e.select(col("src").as("id")).distinct()
+        .join(sd.withColumnRenamed("label", "seed_label"), Seq("id"), "left")
+        .select(col("id"), col("seed_label"),
+          col("seed_label").as("label"))
+        .repartition(numPartitions, col("id"))
+        .localCheckpoint(true), rounds) { cur =>
       val votes = e
-        .join(labels.filter(col("label").isNotNull)
+        .join(cur.filter(col("label").isNotNull)
           .select(col("id").as("src"), col("label")).hint("shuffle_hash"),
           Seq("src"))
         .groupBy(col("dst"), col("label"))
@@ -145,16 +137,13 @@ object LabelPropagation {
       val winner = votes.groupBy(col("dst").as("id"))
         .agg(max_by(col("label"), struct(col("cnt"), -col("label")))
           .as("newLabel"))
-      labels = labels.join(winner.hint("shuffle_hash"), Seq("id"), "left")
+      Superstep.Step(cur.join(winner.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"), col("seed_label"),
           coalesce(col("seed_label"), col("newLabel"), col("label"))
             .as("label"))
-        .localCheckpoint(true)
-      gc.tick()
-      r += 1
+        .localCheckpoint(true))
     }
     e.unpersist()
-    gc.close()
     labels.select(col("id"), col("label"))
   }
 }

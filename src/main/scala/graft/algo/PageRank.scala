@@ -112,65 +112,48 @@ object PageRank {
     // broadcast() hints (r6): the split joins run with AQE off, so the
     // ≤4096-row hot set must be pinned to a broadcast build explicitly
     // rather than trusting the static size estimate of a cached limit
-    val coldPlan = if (!hasHot) null else
+    val e = if (!hasHot) ePre else
       ePre.join(broadcast(hotIds.withColumnRenamed("id", "src")),
           Seq("src"), "left_anti")
         .repartition(numPartitions, col("src"))
-    val hotPlan = if (!hasHot) null else
-      ePre.join(broadcast(hotIds.withColumnRenamed("id", "src")),
-        Seq("src"), "left_semi")
-        .repartition(numPartitions, col("dst"))
-    // diagnostic-only (r6 plan evidence): dump the split-stage plans
-    // when the plan-capture env is set; a no-op in every normal run
-    sys.env.get("GRAFT_PLAN_DIR").filter(_.nonEmpty).foreach { dir =>
-      val sfx = sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "before")
-      val p = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.createDirectories(p)
-      def dump(name: String, df: DataFrame): Unit =
-        java.nio.file.Files.write(p.resolve(s"${name}_$sfx.txt"),
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-      if (hasHot) { dump("pagerank_split_cold", coldPlan)
-        dump("pagerank_split_hot", hotPlan) }
-      else dump("pagerank_split_cold", ePre)
-    }
-    val e = if (!hasHot) ePre else
-      coldPlan.persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val eHot = if (!hasHot) null else
-      hotPlan.persist(StorageLevel.MEMORY_AND_DISK)
+      ePre.join(broadcast(hotIds.withColumnRenamed("id", "src")),
+          Seq("src"), "left_semi")
+        .repartition(numPartitions, col("dst"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     if (hasHot) { e.count(); eHot.count(); ePre.unpersist() }
 
-    val resumed = ckpt.flatMap(c => c.latest().map(step => (step, c.load(step))))
+    // one state row per vertex, fresh or resumed
+    val n = degAll.count()
 
-    var state = resumed.map(_._2).getOrElse {
-      degAll
+    // the fresh start state; never built when the loop resumes
+    def fresh: DataFrame = {
+      var state = degAll
         .select(col("id"), col("outDeg"),
           lit(Double.NaN).as("rank"), lit(Double.NaN).as("prev"))
         .repartition(numPartitions, col("id"))
-    }
-    val n = state.count()
-    // personalization column s joins in ONCE and rides the state table;
-    // the uniform path adds no column and keeps its exact expressions
-    seeds.foreach { sd =>
-      // evaluate the (possibly non-trivial) seed query ONCE; the tiny
-      // checkpoint backs both the count and the state join
-      val s = sd.select(col("id")).distinct().localCheckpoint(true)
-      val seedCnt = s.count()
-      require(seedCnt > 0, "personalized PageRank needs a non-empty seed set")
-      // a seed id absent from the vertex set would silently deflate the
-      // teleport distribution (Σs < 1) — or, all-isolated, "converge"
-      // instantly to all-zero ranks. Fail loudly instead.
-      val matched = s.join(state.select(col("id")), Seq("id"), "left_semi").count()
-      require(matched == seedCnt,
-        s"${seedCnt - matched} of $seedCnt seed ids are not graph vertices")
-      state = state.join(s.withColumn("isSeed", lit(true)), Seq("id"), "left")
-        .withColumn("s",
-          when(col("isSeed"), lit(1.0 / seedCnt)).otherwise(lit(0.0)))
-        .drop("isSeed")
-        .repartition(numPartitions, col("id"))
-    }
-    if (resumed.isEmpty) {
-      state = init match {
+      // personalization column s joins in ONCE and rides the state table;
+      // the uniform path adds no column and keeps its exact expressions
+      seeds.foreach { sd =>
+        // evaluate the (possibly non-trivial) seed query ONCE; the tiny
+        // checkpoint backs both the count and the state join
+        val s = sd.select(col("id")).distinct().localCheckpoint(true)
+        val seedCnt = s.count()
+        require(seedCnt > 0, "personalized PageRank needs a non-empty seed set")
+        // a seed id absent from the vertex set would silently deflate the
+        // teleport distribution (Σs < 1) — or, all-isolated, "converge"
+        // instantly to all-zero ranks. Fail loudly instead.
+        val matched = s.join(state.select(col("id")), Seq("id"), "left_semi").count()
+        require(matched == seedCnt,
+          s"${seedCnt - matched} of $seedCnt seed ids are not graph vertices")
+        state = state.join(s.withColumn("isSeed", lit(true)), Seq("id"), "left")
+          .withColumn("s",
+            when(col("isSeed"), lit(1.0 / seedCnt)).otherwise(lit(0.0)))
+          .drop("isSeed")
+          .repartition(numPartitions, col("id"))
+      }
+      val ranked = init match {
         case None =>
           state.withColumn("rank",
             if (seeds.isEmpty) lit(1.0 / n) else col("s"))
@@ -190,15 +173,11 @@ object PageRank {
           require(tot > 0, "warm-start ranks must have positive total mass")
           joined.withColumn("rank", col("r0") / tot).drop("r0")
       }
+      // LAZY checkpoints throughout the loop: the per-iteration stats
+      // aggregation is the action that materializes them, so each
+      // superstep runs ONE job (was two: eager checkpoint + agg)
+      ranked.localCheckpoint(false)
     }
-    // LAZY checkpoints throughout the loop: the per-iteration stats
-    // aggregation is the action that materializes them, so each
-    // superstep runs ONE job (was two: eager checkpoint + agg)
-    state = state.localCheckpoint(false)
-
-    var step = resumed.map(_._1).getOrElse(0)
-    var converged = false
-    val gc = new Superstep.CheckpointGC(spark)
 
     def aggState(s: DataFrame): (Double, Double) = {
       val row = s.agg(
@@ -209,63 +188,56 @@ object PageRank {
         if (row.isNullAt(1)) 0.0 else row.getDouble(1))
     }
 
-    var (_, dangling) = aggState(state)
-
-    while (step < maxIter && !converged) {
-      // SHUFFLE_HASH hints: a sort-merge join would re-sort the (cached,
-      // already co-partitioned) edge table and the state EVERY superstep;
-      // hash joins stream them. Build side = the skinny rank slice.
-      val rankSlice = state.filter(col("outDeg") > 0)
-        .select(col("id").as("src"), (col("rank") / col("outDeg")).as("c"))
-      val coldContrib = e
-        .join(rankSlice.hint("shuffle_hash"), Seq("src"))
-        .select(col("dst"), (col("c") * col("w")).as("c"))
-      val allContrib = if (!hasHot) coldContrib else {
-        val hotRanks = rankSlice.join(hotIds.withColumnRenamed("id", "src"),
-          Seq("src"), "left_semi")
-        coldContrib.unionAll(
-          eHot.join(broadcast(hotRanks), Seq("src"))
-            .select(col("dst"), (col("c") * col("w")).as("c")))
-      }
-      val contribs = allContrib
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("c")).as("contrib"))
-
-      val rankExpr =
-        if (seeds.isEmpty)
-          lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dangling / n))
-        else
-          lit(1.0 - damping) * col("s") +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-              lit(dangling) * col("s"))
-      val carry = if (seeds.isEmpty) Seq.empty else Seq(col("s"))
-      val next = state
-        .join(contribs.hint("shuffle_hash"), Seq("id"), "left")
-        .select(Seq(col("id"), col("outDeg"), rankExpr.as("rank"),
-          col("rank").as("prev")) ++ carry: _*)
-
-      state = next.localCheckpoint(false)
-      step += 1
-
-      val (delta, danglingNext) = aggState(state) // materializes the checkpoint
-      gc.tick()
-      dangling = danglingNext
-      converged = delta < tol
-
-      ckpt.foreach { c =>
-        if (step % c.every == 0 || converged) {
-          state = c.save(step, state, Map("delta" -> delta, "dangling" -> dangling))
+    // the start state's dangling mass is measured by the first step
+    var dangling: Option[Double] = None
+    val (state, steps, converged) =
+      Superstep.iterate(spark, fresh, maxIter, ckpt = ckpt) { st =>
+        val dang = dangling.getOrElse(aggState(st)._2)
+        // SHUFFLE_HASH hints: a sort-merge join would re-sort the (cached,
+        // already co-partitioned) edge table and the state EVERY superstep;
+        // hash joins stream them. Build side = the skinny rank slice.
+        val rankSlice = st.filter(col("outDeg") > 0)
+          .select(col("id").as("src"), (col("rank") / col("outDeg")).as("c"))
+        val coldContrib = e
+          .join(rankSlice.hint("shuffle_hash"), Seq("src"))
+          .select(col("dst"), (col("c") * col("w")).as("c"))
+        val allContrib = if (!hasHot) coldContrib else {
+          val hotRanks = rankSlice.join(hotIds.withColumnRenamed("id", "src"),
+            Seq("src"), "left_semi")
+          coldContrib.unionAll(
+            eHot.join(broadcast(hotRanks), Seq("src"))
+              .select(col("dst"), (col("c") * col("w")).as("c")))
         }
+        val contribs = allContrib
+          .groupBy(col("dst").as("id"))
+          .agg(sum(col("c")).as("contrib"))
+
+        val rankExpr =
+          if (seeds.isEmpty)
+            lit((1.0 - damping) / n) +
+              lit(damping) * (coalesce(col("contrib"), lit(0.0)) + lit(dang / n))
+          else
+            lit(1.0 - damping) * col("s") +
+              lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
+                lit(dang) * col("s"))
+        val carry = if (seeds.isEmpty) Seq.empty else Seq(col("s"))
+        val next = st
+          .join(contribs.hint("shuffle_hash"), Seq("id"), "left")
+          .select(Seq(col("id"), col("outDeg"), rankExpr.as("rank"),
+            col("rank").as("prev")) ++ carry: _*)
+          .localCheckpoint(false)
+
+        val (delta, danglingNext) = aggState(next) // materializes the checkpoint
+        dangling = Some(danglingNext)
+        Superstep.Step(next, delta < tol,
+          Map("delta" -> delta, "dangling" -> danglingNext))
       }
-    }
 
     degAll.unpersist()
     hotIds.unpersist()
     e.unpersist()
     if (hasHot) eHot.unpersist()
-    gc.close()
-    Result(state.select(col("id"), col("rank")), step, converged, edgeCount)
+    Result(state.select(col("id"), col("rank")), steps, converged, edgeCount)
   }
 
   /** Batched personalized PageRank: one superstep loop computes PPR
@@ -311,16 +283,15 @@ object PageRank {
     val missing = seedDist.join(deg, Seq("id"), "left_anti").count()
     require(missing == 0, s"$missing seed rows are not graph vertices")
 
-    var state = Superstep.freshCheckpoint(
-      seedDist.join(deg.hint("shuffle_hash"), Seq("id"))
-        .select(col("id"), col("sid"), col("outDeg"), col("s").as("rank"))
-        .repartition(numPartitions, col("id")), eager = true)
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
-    for (_ <- 1 to iters) {
-      val dgl = state.filter(col("outDeg") === 0)
+    val start = seedDist.join(deg.hint("shuffle_hash"), Seq("id"))
+      .select(col("id"), col("sid"), col("outDeg"), col("s").as("rank"))
+      .repartition(numPartitions, col("id"))
+    val (state, _, _) = Superstep.iterate(spark,
+        Superstep.freshCheckpoint(start, eager = true), iters, keep = 4) { st =>
+      val dgl = st.filter(col("outDeg") === 0)
         .groupBy(col("sid")).agg(sum(col("rank")).as("dang"))
       val contribs = e
-        .join(state.filter(col("outDeg") > 0)
+        .join(st.filter(col("outDeg") > 0)
             .select(col("id").as("src"), col("sid"),
               (col("rank") / col("outDeg")).as("c"))
             .hint("shuffle_hash"),
@@ -338,17 +309,14 @@ object PageRank {
             lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
               coalesce(col("dang"), lit(0.0)) * coalesce(col("s"), lit(0.0))))
             .as("rank"))
-      val next = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         merged.join(deg.hint("shuffle_hash"), Seq("id"))
           .select(col("id"), col("sid"), col("outDeg"), col("rank"))
-          .repartition(numPartitions, col("id")), eager = true)
-      state = next
-      gc.tick()
+          .repartition(numPartitions, col("id")), eager = true))
     }
     val out = state.select(col("sid"), col("id"), col("rank"))
       .localCheckpoint(true)
-    gc.close(keepLatest = 1) // `out` is the newest loop-scope checkpoint
-    Seq(e, deg).foreach(Superstep.freeCheckpoint)
+    Seq(e, deg, state).foreach(Superstep.freeCheckpoint)
     out
   }
 

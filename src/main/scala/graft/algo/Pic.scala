@@ -75,26 +75,25 @@ object Pic {
     val seeded = deg.select(col("id"),
       (lit(1.0) + pmod(col("id"), lit(seedMod)).cast("double")).as("s"))
     val s1 = seeded.agg(sum(col("s"))).first().getDouble(0)
-    var v = Superstep.freshCheckpoint(
-      seeded.select(col("id"), (col("s") / s1).as("v")), eager = true)
-    val gc = new Superstep.CheckpointGC(spark, keep = 3)
-    for (_ <- 1 to iters) {
+    val (v, _, _) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        seeded.select(col("id"), (col("s") / s1).as("v")), eager = true),
+      iters, keep = 3) { cur =>
       // u = D⁻¹ A v, then L1-normalize (all values stay positive)
-      val msgs = v.join(e.hint("shuffle_hash"), v("id") === e("src"))
+      val msgs = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .select(e("dst").as("id"), col("v").as("m"))
         .groupBy(col("id")).agg(sum(col("m")).as("s"))
       val u = msgs.join(deg, Seq("id")).select(col("id"), (col("s") / col("d")).as("u"))
       val l1 = u.agg(sum(abs(col("u")))).first().getDouble(0)
-      v = Superstep.freshCheckpoint(
-        u.select(col("id"), (col("u") / l1).as("v")), eager = true)
-      gc.tick()
+      Superstep.Step(Superstep.freshCheckpoint(
+        u.select(col("id"), (col("u") / l1).as("v")), eager = true))
     }
 
     // integer micro-unit embedding: |V|-scaled, 6dp, exact BIGINT
     val emb = Superstep.freshCheckpoint(
       v.select(col("id"),
         round(col("v") * n.toDouble * 1e6, 0).cast("long").as("emb")), eager = true)
-    gc.close(keepLatest = 1) // emb is the newest loop-scope checkpoint
+    Superstep.freeCheckpoint(v)
 
     // ── largest-gap split without a global window ──
     val ranged = emb.repartitionByRange(numPartitions, col("emb"), col("id"))

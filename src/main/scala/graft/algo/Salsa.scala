@@ -70,21 +70,18 @@ object Salsa {
         .unionAll(e0.select(col("dst").as("id"))).distinct()
         .repartition(numPartitions, col("id")), eager = true)
 
-    var state = Superstep.freshCheckpoint(
-      verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark, keep = 8)
-    var iter = 0
-    var converged = false
     def l1(df: DataFrame, c: String): Double = {
       val n = df.agg(sum(col(c))).collect()(0).getDouble(0)
       if (n > 0) n else 1.0
     }
-    while (iter < maxIter && !converged) {
+    val (state, iters, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true),
+      maxIter, keep = 8) { st =>
       // authority chain: gather a·inv_in back over each edge, scatter
       // forward scaled by inv_out
       val t = eDst
-        .join(state.hint("shuffle_hash"), eDst("dst") === state("id"))
+        .join(st.hint("shuffle_hash"), eDst("dst") === st("id"))
         .groupBy(eDst("src").as("u"))
         .agg(sum(col("a") * eDst("inv_in")).as("t"))
       val aRaw = eSrc
@@ -100,7 +97,7 @@ object Salsa {
       // hub chain: gather h·inv_out forward over each edge, scatter
       // back scaled by inv_in
       val sS = eSrc
-        .join(state.hint("shuffle_hash"), eSrc("src") === state("id"))
+        .join(st.hint("shuffle_hash"), eSrc("src") === st("id"))
         .groupBy(eSrc("dst").as("v"))
         .agg(sum(col("h") * eSrc("inv_out")).as("s"))
       val hRaw = eDst
@@ -115,24 +112,20 @@ object Salsa {
       val next = Superstep.freshCheckpoint(
         hr.select(col("id"), (col("hraw") / nh).as("h"))
           .join(auth, Seq("id")), eager = false)
-      if (tol > 0) {
+      if (tol <= 0) Superstep.Step(next)
+      else {
         val delta = next
-          .join(state.select(col("id"), col("h").as("h0"), col("a").as("a0")),
+          .join(st.select(col("id"), col("h").as("h0"), col("a").as("a0")),
             Seq("id"))
           .agg(sum(abs(col("h") - col("h0")) + abs(col("a") - col("a0"))))
           .collect()(0).getDouble(0)
-        converged = delta < tol
+        Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
-      state = next
-      gc.tick()
-      iter += 1
     }
-    if (tol <= 0) state.count() // materialize before the sweep frees ar/hr
-    gc.close(keepLatest = 1)
     Superstep.freeCheckpoint(eSrc)
     Superstep.freeCheckpoint(eDst)
     Superstep.freeCheckpoint(verts)
     Result(state.select(col("id"), col("h").as("hub"), col("a").as("auth")),
-      iter, converged)
+      iters, converged)
   }
 }

@@ -78,12 +78,10 @@ object SimRank {
       e.select(col("dst").as("v"), col("src").as("n"))
         .repartition(numPartitions, col("v")), eager = true)
 
-    var scores = Superstep.freshCheckpoint(
-      pairs.select(col("a"), col("b"), lit(0.0).as("s")), eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
-    var iter = 0
-    while (iter < maxIter) {
+    val (scores, iters, _) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        pairs.select(col("a"), col("b"), lit(0.0).as("s")), eager = true),
+      maxIter, keep = 4) { prev =>
       val withI = pairs
         .join(inE.select(col("v").as("a"), col("n").as("i")).hint("shuffle_hash"),
           Seq("a"))
@@ -95,23 +93,20 @@ object SimRank {
           greatest(col("i"), col("j")).as("hi"),
           (col("i") === col("j")).as("diag"))
       val looked = withIJ
-        .join(scores.select(col("a").as("lo"), col("b").as("hi"),
+        .join(prev.select(col("a").as("lo"), col("b").as("hi"),
           col("s").as("sprev")).hint("shuffle_hash"), Seq("lo", "hi"), "left")
         .select(col("a"), col("b"), col("ia"), col("ib"),
           when(col("diag"), lit(1.0))
             .otherwise(coalesce(col("sprev"), lit(0.0))).as("shat"))
-      scores = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         looked.groupBy(col("a"), col("b"), col("ia"), col("ib"))
           .agg(sum(col("shat")).as("t"))
           .select(col("a"), col("b"),
             (lit(c) / (col("ia") * col("ib")) * col("t")).as("s")),
-        eager = true)
-      gc.tick()
-      iter += 1
+        eager = true))
     }
-    gc.close(keepLatest = 1)
     Superstep.freeCheckpoint(pairs)
     Superstep.freeCheckpoint(inE)
-    Result(scores, iter)
+    Result(scores, iters)
   }
 }

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-superstep durable checkpointing with per-partition lineage and
-  * convergence metrics (north rule; reference analogue: community-id
-  * write-back batches, community_detection.py:156-181, G-7).
+/** The superstep skeleton ([[Superstep.iterate]]) and per-superstep
+  * durable checkpointing with per-partition lineage and convergence
+  * metrics (north rule; reference analogue: community-id write-back
+  * batches, community_detection.py:156-181, G-7).
   *
   * Layout under `dir` (parquet-as-Iceberg table layout):
   *
@@ -101,6 +102,69 @@ object Superstep {
     }
   }
 
+  /** One superstep's outcome: the next state, whether it is the fixed
+    * point, and the driver metrics a durable save records with it
+    * (`delta`, `changes`, …). A step that runs no measuring action
+    * leaves `converged` false.
+    */
+  final case class Step(state: DataFrame, converged: Boolean = false,
+                        metrics: Map[String, Double] = Map.empty)
+
+  /** The superstep skeleton (Pregelix-style: the runtime, not the
+    * operator, owns checkpointing and the stopping rule). Runs `step`
+    * until it reports convergence or `maxIter` supersteps have run and
+    * returns (final state, supersteps run, converged). The step owns
+    * the per-superstep plan and its measuring action; `iterate` owns
+    * everything around it:
+    *
+    *  - resume: when `ckpt` holds a committed superstep the loop starts
+    *    from that state and step number, and `start` is never
+    *    evaluated; resumed steps count toward `maxIter` and the result;
+    *  - storage: a [[CheckpointGC]] built after the start state (which,
+    *    with any cache its evaluation fills, stays the caller's) frees
+    *    every checkpoint the steps create except the newest `keep`
+    *    after each step, and all but the newest on exit;
+    *  - durability: every `ckpt.every` steps, and at convergence, the
+    *    state is saved with the step's metrics and the loop continues
+    *    from the re-read copy;
+    *  - materialize-before-close: a final state that is still an
+    *    unmaterialized lazy checkpoint (a step with no measuring action)
+    *    is counted before the sweep, since the sweep frees the frames
+    *    its lineage reads. A measured or eagerly checkpointed state
+    *    costs no extra job.
+    *
+    * Convergence policy: `iterate` never hides a cap stop — the flag
+    * is returned, and each caller either reports it in its result
+    * (PageRank, LPA, the power iterations) or throws (CC and the
+    * peeling loops, whose partial answer would be wrong, not just
+    * imprecise). It adds no Spark job per superstep and changes no
+    * AQE setting; callers keep their run-level [[withoutAQE]] scope.
+    */
+  def iterate(spark: SparkSession, start: => DataFrame, maxIter: Int,
+              keep: Int = 2, ckpt: Option[Superstep] = None)
+             (step: DataFrame => Step): (DataFrame, Int, Boolean) = {
+    val resumed = ckpt.flatMap(_.resume())
+    var state = resumed.fold(start)(_._2)
+    val gc = new CheckpointGC(spark, keep)
+    var steps = resumed.fold(0)(_._1)
+    var converged = false
+    while (steps < maxIter && !converged) {
+      val s = step(state)
+      steps += 1
+      converged = s.converged
+      state = s.state
+      gc.tick()
+      ckpt.foreach { c =>
+        if (steps % c.every == 0 || converged)
+          state = c.save(steps, state, s.metrics)
+      }
+    }
+    if (!org.apache.spark.sql.graft.CheckpointStats.materialized(state))
+      state.count()
+    gc.close()
+    (state, steps, converged)
+  }
+
   /** Run `f` with AQE disabled. Inside a superstep loop AQE is a
     * pessimization: it re-plans every micro-job AND drops the known
     * hash-partitioning of localCheckpoint'ed state (LogicalRDD under
@@ -138,6 +202,9 @@ final class Superstep(spark: SparkSession, dir: String, val every: Int = 5) {
 
   def load(step: Int): DataFrame =
     spark.read.parquet(base.resolve(s"superstep=$step").toString)
+
+  /** The highest committed superstep and its state, if any. */
+  def resume(): Option[(Int, DataFrame)] = latest().map(s => (s, load(s)))
 
   /** Persist `state` for `step`; returns the re-read (plan-truncated)
     * frame. `driverMetrics` are appended to the metrics JSON.

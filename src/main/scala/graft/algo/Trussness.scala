@@ -66,21 +66,18 @@ object Trussness {
 
     val support = inc.groupBy(col("eu").as("u"), col("ev").as("v"))
       .agg(count(lit(1)).as("sup"))
-    var state = Superstep.freshCheckpoint(
-      pairs.join(support, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          (coalesce(col("sup"), lit(0L)) + 2L).as("t")), eager = true)
-
-    val gc = new Superstep.CheckpointGC(spark)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
+    val (state, _, converged) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        pairs.join(support, Seq("u", "v"), "left")
+          .select(col("u"), col("v"),
+            (coalesce(col("sup"), lit(0L)) + 2L).as("t")), eager = true),
+      maxIter) { cur =>
       // per (edge, triangle): the weaker partner's level; histogram at
       // (edge, value) grain — equal values collapse map-side
       val hist = inc
-        .join(state.select(col("u").as("pu"), col("v").as("pv"),
+        .join(cur.select(col("u").as("pu"), col("v").as("pv"),
           col("t").as("tp")).hint("shuffle_hash"), Seq("pu", "pv"))
-        .join(state.select(col("u").as("qu"), col("v").as("qv"),
+        .join(cur.select(col("u").as("qu"), col("v").as("qv"),
           col("t").as("tq")).hint("shuffle_hash"), Seq("qu", "qv"))
         .groupBy(col("eu").as("u"), col("ev").as("v"),
           (least(col("tp"), col("tq")) - 2L).as("x"))
@@ -94,14 +91,12 @@ object Trussness {
         pairs.join(h, Seq("u", "v"), "left")
           .select(col("u"), col("v"),
             (coalesce(col("h"), lit(0L)) + 2L).as("t")), eager = false)
-      changed = next.join(state.withColumnRenamed("t", "prev"), Seq("u", "v"))
+      val changed = next.join(cur.withColumnRenamed("t", "prev"), Seq("u", "v"))
         .filter(col("t") =!= col("prev")).count()
-      gc.tick()
-      state = next; iter += 1
+      Superstep.Step(next, changed == 0)
     }
-    require(changed == 0,
+    require(converged,
       s"trussness refinement did not converge within $maxIter rounds")
-    gc.close()
     Superstep.freeCheckpoint(inc)
     state.select(col("u").as("src"), col("v").as("dst"),
       col("t").as("trussness"))

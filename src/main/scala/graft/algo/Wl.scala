@@ -83,41 +83,38 @@ object Wl {
 
       // color₀ = the degree partition (both channels start equal; they
       // diverge immediately through the distinct channel constants)
-      var state = Superstep.freshCheckpoint(
-        e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-          .select(col("id"),
-            pmod(col("d"), lit(P1)).as("c1"),
-            pmod(col("d"), lit(P2)).as("c2"))
-          .repartition(numPartitions, col("id")), eager = true)
-
-      val gc = new Superstep.CheckpointGC(spark, keep = 3)
-      for (_ <- 1 to rounds) {
+      val (state, _, _) = Superstep.iterate(spark,
+        Superstep.freshCheckpoint(
+          e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+            .select(col("id"),
+              pmod(col("d"), lit(P1)).as("c1"),
+              pmod(col("d"), lit(P2)).as("c2"))
+            .repartition(numPartitions, col("id")), eager = true),
+        rounds, keep = 3) { cur =>
         // per-neighbor mix, then a commutative decimal sum per vertex
         // (map-side partial agg; DECIMAL(38,0) cannot overflow below
         // 10^38 ≈ 2^126 — no ANSI trap at any hub degree)
-        val msgs = state.join(e.hint("shuffle_hash"), state("id") === e("src"))
+        val msgs = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
           .select(e("dst").as("id"),
             (col("c1") * A1 + B1).cast("decimal(38,0)").as("g1"),
             (col("c2") * A2 + B2).cast("decimal(38,0)").as("g2"))
         val sums = msgs.groupBy(col("id")).agg(
           (sum(col("g1")) % P1).cast("long").as("s1"),
           (sum(col("g2")) % P2).cast("long").as("s2"))
-        // every vertex in `state` has ≥1 neighbor by construction, so
+        // every vertex in the state has ≥1 neighbor by construction, so
         // the join is inner and total
-        state = Superstep.freshCheckpoint(
-          state.join(sums.hint("shuffle_hash"), Seq("id"))
+        Superstep.Step(Superstep.freshCheckpoint(
+          cur.join(sums.hint("shuffle_hash"), Seq("id"))
             .select(col("id"),
               pmod(col("c1") * U1 + col("s1") + V1, lit(P1)).as("c1"),
               pmod(col("c2") * U2 + col("s2") + V2, lit(P2)).as("c2")),
-          eager = true)
-        gc.tick()
+          eager = true))
       }
 
       val out = Superstep.freshCheckpoint(
         state.select(col("id"), col("c1"), col("c2"),
           (col("c1") * P2 + col("c2")).as("color")), eager = true)
-      gc.close(keepLatest = 1) // `out` is the newest loop-scope checkpoint
-      Superstep.freeCheckpoint(e)
+      Seq(e, state).foreach(Superstep.freeCheckpoint)
       out
     }
 

@@ -23,8 +23,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoint in Spark 3.x), resetting the chain each round while
   * KEEPING the output partitioning and ordering metadata that the
   * exchange-free co-partitioned joins rely on. This file sits under
-  * `org.apache.spark.sql` only for `Dataset.ofRows` access — the
-  * standard extension point for Spark-native libraries.
+  * `org.apache.spark.sql` only for `Dataset.ofRows` access and the
+  * `private[spark]` RDD checkpoint state — the standard extension
+  * point for Spark-native libraries.
   */
 object CheckpointStats {
 
@@ -43,4 +44,13 @@ object CheckpointStats {
       case _ => df
     }
   }
+
+  /** False iff some leaf of `df` is a local checkpoint that no job has
+    * computed yet (a lazy `localCheckpoint` awaiting its first action).
+    */
+  def materialized(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall {
+      case l: LogicalRDD => l.rdd.checkpointData.forall(_.isCheckpointed)
+      case _ => true
+    }
 }

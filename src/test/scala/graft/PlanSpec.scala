@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -258,6 +260,56 @@ class PlanSpec extends AnyFunSuite {
       def count(re: String) = re.r.findAllIn(phys).size
       assert(count("""ENSURE_REQUIREMENTS""") === 1,
         s"only the distinct's exchange may shuffle:\n$phys")
+    }
+  }
+
+  test("CC star rounds: no SMJ; each round's exchanges pinned") {
+    Superstep.withoutAQE(spark) {
+      // state partitioned as the loop's checkpoints are: by the
+      // previous small-star's (src, dst) distinct
+      val e = (0L until 80L).map(i => (i, (i * 3 + 1) % 80)).toDF("src", "dst")
+        .repartition(8, col("src"), col("dst"))
+      // the keys of every shuffle the planner inserts (a reused
+      // exchange is a leaf here, so it is not counted twice)
+      def shape(df: DataFrame): (String, Seq[String]) = {
+        val plan = df.queryExecution.executedPlan
+        val keys = plan.collect {
+          case x: ShuffleExchangeExec if x.shuffleOrigin == ENSURE_REQUIREMENTS =>
+            x.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+              .flatMap(_.references.map(_.name)).mkString(", ")
+        }
+        (plan.toString, keys.sorted)
+      }
+      val (large, largeKeys) = shape(graft.algo.ConnectedComponents.largeStar(e))
+      val (small, smallKeys) = shape(graft.algo.ConnectedComponents.smallStar(e))
+      for (phys <- Seq(large, small))
+        assert(!phys.contains("SortMergeJoin"), s"no sort-merge in a star round:\n$phys")
+      assert(largeKeys === Seq("src", "src"),
+        s"large-star: the min-neighbor agg and the join probe side:\n$large")
+      assert(smallKeys === Seq("src", "src", "src, dst"),
+        s"small-star: the min agg, the join probe side, the distinct:\n$small")
+    }
+  }
+
+  test("LPA vote step: no SMJ; the labels-winner join adds no exchange") {
+    Superstep.withoutAQE(spark) {
+      val P = 8 // = spark.sql.shuffle.partitions, as in a configured run
+      val e = (0L until 80L).flatMap(i => Seq((i, (i * 3 + 1) % 80), ((i * 3 + 1) % 80, i)))
+        .toDF("src", "dst").repartition(P, col("src"))
+      val labels = (0L until 80L).map(i => (i, i % 7)).toDF("id", "label")
+        .repartition(P, col("id"))
+      val next = graft.algo.LabelPropagation.vote(e, labels, None)
+      assert(logicalWindows(next) === 0)
+      val phys = next.queryExecution.executedPlan.toString
+      assert(!phys.contains("SortMergeJoin"), s"no sort-merge in the vote step:\n$phys")
+      // the inputs' own REPARTITION_BY_NUM exchanges stand in for the
+      // loop's partitioned checkpoints; only the two vote aggregations
+      // may shuffle — neither the edges-state nor the labels-winner join
+      def count(re: String) = re.r.findAllIn(phys).size
+      assert(count("""ENSURE_REQUIREMENTS""") === 2,
+        s"only the (dst, label) and dst aggregations may shuffle:\n$phys")
+      assert(count("""Exchange hashpartitioning\(id#\d+L?, \d+\), ENSURE""") === 0,
+        s"labels-winner join must be co-partitioned:\n$phys")
     }
   }
 
