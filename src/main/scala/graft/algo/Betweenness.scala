@@ -57,7 +57,7 @@ object Betweenness {
     var frontier = state
     var frontierN = frontier.count()
     var depth = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 8)
+    val gc = new Superstep.CheckpointGC(spark)
     while (frontierN > 0 && depth < maxIter) {
       depth += 1
       // σ(v) = Σ σ(u) over BFS-DAG preds u — all of them live in the
@@ -78,13 +78,10 @@ object Betweenness {
         state = Superstep.freshCheckpoint(state.unionByName(next), eager = true)
       }
       frontier = next
-      gc.tick()
+      gc.tick(state, frontier)
     }
     require(frontierN == 0,
       s"betweenness forward pass still live after $maxIter rounds")
-    // newest loop checkpoint is the EMPTY final frontier; keep 2 so
-    // the final σ state survives this sweep (as in ShortestPaths)
-    gc.close(keepLatest = 2)
     Forward(edges, state, depth - 1)
   }
 
@@ -98,7 +95,7 @@ object Betweenness {
           symEdges: DataFrame,
           sources: Seq[Long],
           numPartitions: Int = 32,
-          maxIter: Int = 256): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 256): DataFrame = Superstep.scope(spark) {
     val fwd = forward(spark, symEdges, sources, numPartitions, maxIter)
     val edges = fwd.edges
     val state = fwd.state
@@ -112,9 +109,7 @@ object Betweenness {
         .select(col("id"), col("landmark"), lit(0.0).as("delta")),
       eager = true)
     var acc = delta // all (id, landmark, delta) rows finalized so far
-    // fresh GC anchored AFTER state/delta so its ticks can never
-    // sweep the σ table the level filters keep reading
-    val gcB = new Superstep.CheckpointGC(spark, keep = 8)
+    val gc = new Superstep.CheckpointGC(spark)
     var d = maxDist
     while (d > 0) {
       val lower = state.filter(col("dist") === d)
@@ -139,20 +134,16 @@ object Betweenness {
         eager = true)
       acc = Superstep.freshCheckpoint(acc.unionByName(level), eager = true)
       delta = level
-      gcB.tick()
+      gc.tick(delta, acc)
       d -= 1
     }
 
     // v ≠ s: drop each landmark's own (dist 0) row, sum over landmarks
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       acc.join(state.filter(col("dist") === 0)
         .select(col("id"), col("landmark")), Seq("id", "landmark"), "left_anti")
         .groupBy(col("id"))
         .agg(sum(col("delta")).as("betweenness")), eager = true)
-    gcB.close(keepLatest = 1)
-    Superstep.freeCheckpoint(state)
-    Superstep.freeCheckpoint(edges)
-    out
   }
 
   /** Per-EDGE betweenness (Brandes' edge variant — the Girvan–Newman
@@ -179,7 +170,7 @@ object Betweenness {
                  symEdges: DataFrame,
                  sources: Seq[Long],
                  numPartitions: Int = 32,
-                 maxIter: Int = 256): DataFrame = Superstep.withoutAQE(spark) {
+                 maxIter: Int = 256): DataFrame = Superstep.scope(spark) {
     val fwd = forward(spark, symEdges, sources, numPartitions, maxIter)
     val edges = fwd.edges
     val state = fwd.state
@@ -190,7 +181,7 @@ object Betweenness {
         .select(col("id"), col("landmark"), lit(0.0).as("delta")),
       eager = true)
     var edgeAcc: Option[DataFrame] = None
-    val gcB = new Superstep.CheckpointGC(spark, keep = 8)
+    val gc = new Superstep.CheckpointGC(spark)
     var d = maxDist
     while (d > 0) {
       val lower = state.filter(col("dist") === d)
@@ -225,18 +216,14 @@ object Betweenness {
         edgeAcc.map(_.unionByName(lvlEdges)).getOrElse(lvlEdges),
         eager = true))
       delta = level
-      gcB.tick()
+      gc.tick(delta +: edgeAcc.toSeq: _*)
       d -= 1
     }
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       edgeAcc.map(_.groupBy(col("u"), col("v"))
           .agg(sum(col("flow")).as("betweenness")))
         .getOrElse(state.limit(0).select(
           col("id").as("u"), col("id").as("v"),
           lit(0.0).as("betweenness"))), eager = true)
-    gcB.close(keepLatest = 1)
-    Superstep.freeCheckpoint(state)
-    Superstep.freeCheckpoint(edges)
-    out
   }
 }

@@ -67,14 +67,14 @@ object BowTie {
                                    seeds: DataFrame,
                                    numPartitions: Int = 32,
                                    maxIter: Int = 1024): DataFrame =
-    Superstep.withoutAQE(spark) {
+    Superstep.scope(spark) {
       var state = Superstep.freshCheckpoint(
         seeds.select(col("id")).distinct()
           .repartition(numPartitions, col("id")), eager = true)
       var frontier = state
       var frontierSize = frontier.count()
       var iter = 0
-      val gc = new Superstep.CheckpointGC(spark, keep = 4)
+      val gc = new Superstep.CheckpointGC(spark)
 
       while (frontierSize > 0 && iter < maxIter) {
         // the distinct is map-side partial, so a hub frontier ships at
@@ -87,12 +87,11 @@ object BowTie {
             state.unionByName(next), eager = true)
         }
         frontier = next
-        gc.tick()
+        gc.tick(state, frontier)
         iter += 1
       }
       require(frontierSize == 0,
         s"reachability frontier still live after $maxIter rounds — raise maxIter")
-      gc.close(keepLatest = 2)
       state
     }
 
@@ -106,7 +105,7 @@ object BowTie {
   def decompose(spark: SparkSession,
                 edges: DataFrame,
                 numPartitions: Int = 32,
-                maxIter: Int = 1024): DataFrame = Superstep.withoutAQE(spark) {
+                maxIter: Int = 1024): DataFrame = Superstep.scope(spark) {
     def chk(df: DataFrame): DataFrame = Superstep.freshCheckpoint(df, eager = true)
 
     val fwdE = chk(edges.select(col("src"), col("dst"))
@@ -118,10 +117,8 @@ object BowTie {
       .unionAll(fwdE.select(col("dst").as("id"))).distinct()
       .repartition(numPartitions, col("id")))
 
-    if (verts.isEmpty) {
-      Seq(fwdE, bwdE).foreach(Superstep.freeCheckpoint)
-      verts.select(col("id"), lit("CORE").as("region")).limit(0)
-    } else decomposeNonEmpty(spark, fwdE, bwdE, verts, numPartitions, maxIter)
+    if (verts.isEmpty) verts.select(col("id"), lit("CORE").as("region")).limit(0)
+    else decomposeNonEmpty(spark, fwdE, bwdE, verts, numPartitions, maxIter)
   }
 
   private def decomposeNonEmpty(spark: SparkSession,
@@ -171,7 +168,7 @@ object BowTie {
       .select(col("id"), when(col("component") === coreWcc, lit("OTHER"))
         .otherwise(lit("DISCONNECTED")).as("region"))
 
-    val result = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       core.select(col("id"), lit("CORE").as("region"))
         .unionByName(inS.select(col("id"), lit("IN").as("region")))
         .unionByName(outS.select(col("id"), lit("OUT").as("region")))
@@ -179,11 +176,6 @@ object BowTie {
         .unionByName(tendrilIn.select(col("id"), lit("TENDRIL_IN").as("region")))
         .unionByName(tendrilOut.select(col("id"), lit("TENDRIL_OUT").as("region")))
         .unionByName(leftover), eager = true)
-
-    Seq(fwdE, bwdE, verts, scc, core, fwd, bwd, outS, inS, known, rest,
-      fwdIn, bwdOut, tube, tendrilIn, tendrilOut, wcc, touched)
-      .foreach(Superstep.freeCheckpoint)
-    result
   }
 
   /** Region census — the headline table of the Broder paper. */

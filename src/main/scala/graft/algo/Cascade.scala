@@ -75,7 +75,7 @@ object Cascade {
                            needExpr: Column,
                            maxRounds: Int,
                            numPartitions: Int): DataFrame =
-    Superstep.withoutAQE(spark) {
+    Superstep.scope(spark) {
       val e = Superstep.freshCheckpoint(
         symEdges.select(col("src"), col("dst"))
           .filter(col("src") =!= col("dst")).distinct()
@@ -99,7 +99,7 @@ object Cascade {
       var frontier = Superstep.freshCheckpoint(
         state.filter(col("round") === 0).select(col("id")), eager = true)
 
-      val gc = new Superstep.CheckpointGC(spark, keep = 4)
+      val gc = new Superstep.CheckpointGC(spark)
       var r = 0
       var frontierSize = frontier.count()
       while (frontierSize > 0 && r < maxRounds) {
@@ -121,18 +121,15 @@ object Cascade {
           next.filter(col("round") === r).select(col("id")), eager = true)
         state = next
         frontierSize = frontier.count()
-        gc.tick()
+        gc.tick(state, frontier)
       }
 
       val active = state.filter(col("round").isNotNull)
         .select(col("id"), col("round"))
       // seeds with no edges never enter `state` (it is degree-derived)
-      val out = Superstep.freshCheckpoint(
+      Superstep.freshCheckpoint(
         active.unionByName(
           sd.join(state.select(col("id")), Seq("id"), "left_anti")
             .select(col("id"), lit(0).as("round"))), eager = true)
-      gc.close(keepLatest = 1) // `out` is the newest loop-scope checkpoint
-      Seq(e).foreach(Superstep.freeCheckpoint)
-      out
     }
 }

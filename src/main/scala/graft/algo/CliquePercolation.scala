@@ -39,7 +39,7 @@ object CliquePercolation {
     */
   def run(spark: SparkSession,
           undirectedPairs: DataFrame,
-          numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+          numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     val pairs = undirectedPairs
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -83,13 +83,10 @@ object CliquePercolation {
       .select(col("component"), col("m.u").as("cu"), col("m.v").as("cv"))
 
     // …then vertex memberships from the member edges' endpoints
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       members.join(labels.hint("shuffle_hash"), Seq("component"))
         .select(explode(array(col("u"), col("v"))).as("id"),
           col("cu"), col("cv"))
         .distinct(), eager = true)
-    Seq(eids, tri).foreach(Superstep.freeCheckpoint)
-    Superstep.freeCheckpoint(cc)
-    out
   }
 }

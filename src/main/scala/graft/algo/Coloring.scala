@@ -92,7 +92,7 @@ object Coloring {
           maxRounds: Int = 50,
           vertices: Option[DataFrame] = None,
           contractEvery: Int = 8,
-          checkEvery: Int = 1): Result = Superstep.withoutAQE(spark) {
+          checkEvery: Int = 1): Result = Superstep.scope(spark) {
 
     var e = symEdges.select(col("src"), col("dst"))
       .repartition(numPartitions, col("src"))
@@ -145,28 +145,26 @@ object Coloring {
       round += 1
       if (round % checkEvery == 0 || round == maxRounds) {
         remaining = next.filter(col("color").isNull).count()
-        gc.tick()
+        gc.tick(state, e)
       }
 
       if (remaining != 0L && round % contractEvery == 0) {
         // keep only messages into uncolored vertices; the contracted
         // set shrinks with the frontier, so the amortized cost is one
         // scan of a geometrically-decreasing table. Eager checkpoint:
-        // the join's lineage runs through state checkpoints the GC
-        // will free — truncate it before releasing the predecessor.
+        // every later round reads it, so it must not keep the state
+        // chain it was built from reachable.
         val contracted = e.join(
             state.filter(col("color").isNull)
               .select(col("id").as("dst")).hint("shuffle_hash"),
             Seq("dst"), "left_semi")
           .repartition(numPartitions, col("src"))
           .localCheckpoint(true)
-        gc.exempt(contracted) // read by every later round, freed here
-        if (e eq e0) e0.unpersist() else Superstep.freeCheckpoint(e)
+        if (e eq e0) e0.unpersist()
         e = contracted
       }
     }
-    if (e eq e0) e0.unpersist() else Superstep.freeCheckpoint(e)
-    gc.close()
+    if (e eq e0) e0.unpersist()
     Result(state.select(col("id"), col("color")), round, remaining == 0L)
   }
 }

@@ -67,7 +67,7 @@ object ConnectedComponents {
           vertices: Option[DataFrame] = None,
           numPartitions: Int = 32,
           maxIter: Int = 50,
-          ckpt: Option[Superstep] = None): DataFrame = Superstep.withoutAQE(spark) {
+          ckpt: Option[Superstep] = None): DataFrame = Superstep.scope(spark) {
 
     // the start state's checksum is taken by the first round
     var prevSum: Option[(Long, Long)] = None

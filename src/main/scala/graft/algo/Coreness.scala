@@ -61,7 +61,7 @@ object Coreness {
   def run(spark: SparkSession,
           symEdges: DataFrame,
           numPartitions: Int = 32,
-          maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 100): DataFrame = Superstep.scope(spark) {
 
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))

@@ -48,7 +48,7 @@ object Densest {
           pNum: Long = 5,
           pDen: Long = 4,
           numPartitions: Int = 32,
-          maxIter: Int = 200): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 200): Result = Superstep.scope(spark) {
     require(pNum > pDen && pDen > 0,
       s"need (1+eps) = pNum/pDen > 1, got $pNum/$pDen")
 
@@ -59,7 +59,7 @@ object Densest {
         .distinct()
         .repartition(numPartitions, col("u")), eager = true)
 
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
+    val gc = new Superstep.CheckpointGC(spark)
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var tags: DataFrame = null // (id, removed_round), ≤ |V| rows total
     var round = 0
@@ -75,29 +75,29 @@ object Densest {
         stats += ((round, m, n))
         // keep iff deg·pDen·n > 2·pNum·m — exact in DECIMAL(38,0)
         val rhs = BigDecimal(2) * BigDecimal(pNum) * BigDecimal(m)
-        val keep = deg.filter(
+        val kept = deg.filter(
           col("d").cast("decimal(38,0)")
             * lit(BigDecimal(pDen) * BigDecimal(n)) > lit(rhs))
           .select(col("id"))
-        val removed = deg.join(keep, Seq("id"), "left_anti")
+        val removed = deg.join(kept, Seq("id"), "left_anti")
           .select(col("id"), lit(round).as("removed_round"))
         tags = Superstep.freshCheckpoint(
           if (tags == null) removed else tags.unionAll(removed), eager = true)
         val next = Superstep.freshCheckpoint(
-          e.join(keep.withColumnRenamed("id", "u").hint("shuffle_hash"),
+          e.join(kept.withColumnRenamed("id", "u").hint("shuffle_hash"),
               Seq("u"), "left_semi")
-            .join(keep.withColumnRenamed("id", "v").hint("shuffle_hash"),
+            .join(kept.withColumnRenamed("id", "v").hint("shuffle_hash"),
               Seq("v"), "left_semi"), eager = false)
         if (next.count() == 0) {
           // kept vertices whose edges all died: alive through every
           // round so far, but an edgeless tail can never win — tag
           // them past the last scored round and stop
           tags = Superstep.freshCheckpoint(
-            tags.unionAll(keep.select(col("id"),
+            tags.unionAll(kept.select(col("id"),
               lit(round + 1).as("removed_round"))), eager = true)
           done = true
         }
-        gc.tick()
+        gc.tick(next, tags)
         e = next; round += 1
       }
     }
@@ -109,11 +109,8 @@ object Densest {
       val (wr, wm, wn) = stats.reduceLeft { (a, b) =>
         if (BigInt(a._2) * BigInt(b._3) >= BigInt(b._2) * BigInt(a._3)) a else b
       }
-      // materialize before gc.close() — close keeps only the NEWEST
-      // loop-created checkpoint, which must be this frame, not `tags`
       val members = Superstep.freshCheckpoint(
         tags.filter(col("removed_round") >= wr).select(col("id")), eager = true)
-      gc.close()
       Result(members, wm, wn, wr)
     }
   }

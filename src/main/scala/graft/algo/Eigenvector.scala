@@ -42,7 +42,7 @@ object Eigenvector {
           edges: DataFrame,
           numPartitions: Int = 32,
           tol: Double = 0.0,
-          maxIter: Int = 20): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 20): Result = Superstep.scope(spark) {
 
     val w =
       if (edges.columns.contains("weight")) col("weight").cast("double")
@@ -57,7 +57,7 @@ object Eigenvector {
 
     val (state, iters, converged) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(verts.select(col("id"), lit(1.0).as("x")), eager = true),
-      maxIter, keep = 6) { st =>
+      maxIter) { st =>
       val inSum = e
         .join(st.hint("shuffle_hash"), e("src") === st("id"))
         .groupBy(e("dst").as("id")).agg(sum(col("w") * col("x")).as("xraw"))
@@ -77,8 +77,6 @@ object Eigenvector {
         Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
     }
-    Superstep.freeCheckpoint(e)
-    Superstep.freeCheckpoint(verts)
     Result(state.select(col("id"), col("x").as("eig")), iters, converged)
   }
 }

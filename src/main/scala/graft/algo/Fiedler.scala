@@ -38,7 +38,7 @@ object Fiedler {
   def run(spark: SparkSession,
           symEdges: DataFrame,
           numPartitions: Int = 32,
-          iters: Int = 10): Result = Superstep.withoutAQE(spark) {
+          iters: Int = 10): Result = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
@@ -69,7 +69,7 @@ object Fiedler {
         deg.select(col("id"), col("d"),
           (pmod(col("id"), lit(16L)) + lit(1L)).cast("double").as("x")),
         eager = true),
-      iters, keep = 4) { cur =>
+      iters) { cur =>
       val (cen, nrm) = center(cur)
       val y = cen.select(col("id"), col("d"), (col("x") / nrm).as("x"))
       val nbr = e
@@ -96,7 +96,6 @@ object Fiedler {
       .agg(sum((col("fu") - col("fv")) * (col("fu") - col("fv"))))
       .first().getDouble(0)
 
-    Seq(e, deg, x, cen).foreach(Superstep.freeCheckpoint)
     Result(fin, lambda2, c)
   }
 }

@@ -37,7 +37,7 @@ object Hits {
           edges: DataFrame,
           numPartitions: Int = 32,
           tol: Double = 0.0,
-          maxIter: Int = 20): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 20): Result = Superstep.scope(spark) {
 
     val eSrc = Superstep.freshCheckpoint(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
@@ -56,7 +56,7 @@ object Hits {
     val (state, iters, converged) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(
         verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true),
-      maxIter, keep = 8) { st =>
+      maxIter) { st =>
       val inSum = eSrc
         .join(st.hint("shuffle_hash"), eSrc("src") === st("id"))
         .groupBy(eSrc("dst").as("id")).agg(sum(col("h")).as("araw"))
@@ -88,9 +88,6 @@ object Hits {
         Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
     }
-    Superstep.freeCheckpoint(eSrc)
-    Superstep.freeCheckpoint(eDst)
-    Superstep.freeCheckpoint(verts)
     Result(state.select(col("id"), col("h").as("hub"), col("a").as("auth")),
       iters, converged)
   }

@@ -40,7 +40,7 @@ object HittingTime {
           symEdges: DataFrame,
           targets: DataFrame,
           iters: Int = 30,
-          numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+          numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     require(iters >= 0, "iters must be >= 0")
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -62,7 +62,7 @@ object HittingTime {
 
     val (state, _, _) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(verts.select(col("id"), lit(0.0).as("h")), eager = true),
-      iters, keep = 3) { cur =>
+      iters) { cur =>
       val sums = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .groupBy(e("dst").as("id")).agg(sum(col("h")).as("nh"))
       Superstep.Step(Superstep.freshCheckpoint(
@@ -72,10 +72,8 @@ object HittingTime {
               .otherwise(lit(1.0) + coalesce(col("nh"), lit(0.0)) / col("deg"))
               .as("h")), eager = true))
     }
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       state.withColumn("h", round(col("h"), 6)), eager = true)
-    Seq(e, tg, verts, state).foreach(Superstep.freeCheckpoint)
-    out
   }
 
   /** Absorption probability / harmonic voltage: the probability the
@@ -100,7 +98,7 @@ object HittingTime {
                  positives: DataFrame,
                  negatives: DataFrame,
                  iters: Int = 30,
-                 numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+                 numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     require(iters >= 0, "iters must be >= 0")
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -123,7 +121,7 @@ object HittingTime {
     val (state, _, _) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(verts.select(col("id"),
         when(col("isA"), 1.0).otherwise(0.0).as("p")), eager = true),
-      iters, keep = 3) { cur =>
+      iters) { cur =>
       val sums = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .groupBy(e("dst").as("id")).agg(sum(col("p")).as("np"))
       Superstep.Step(Superstep.freshCheckpoint(
@@ -133,10 +131,8 @@ object HittingTime {
               .otherwise(coalesce(col("np"), lit(0.0)) / col("deg"))
               .as("p")), eager = true))
     }
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       state.withColumn("p", round(col("p"), 6)), eager = true)
-    Seq(e, verts, state).foreach(Superstep.freeCheckpoint)
-    out
   }
 
   /** Effective resistance between two vertices with unit edge

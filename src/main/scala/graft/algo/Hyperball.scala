@@ -93,7 +93,7 @@ object Hyperball {
           symEdges: DataFrame,
           k: Int = 256,
           numPartitions: Int = 32,
-          maxIter: Int = 128): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 128): Result = Superstep.scope(spark) {
 
     val edges = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -109,7 +109,7 @@ object Hyperball {
           lit(0L).as("ecc")),
       eager = true)
 
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
+    val gc = new Superstep.CheckpointGC(spark)
     // nf(0) = |V|: the eager init checkpoint makes this count cheap,
     // and each round extends the series by its Δ-sum — the convergence
     // action doubles as the distance-distribution collector
@@ -144,13 +144,11 @@ object Hyperball {
       growing = dSum > 0.0
       if (growing) nfSeries += nfSeries.last + dSum
       state = chk
-      gc.tick()
+      gc.tick(state)
       t += 1
     }
     require(!growing,
       s"HyperBall still expanding after $maxIter rounds — raise maxIter")
-    gc.close(keepLatest = 1)
-    Superstep.freeCheckpoint(edges)
     Result(state.select(col("id"), col("nf"), col("sum_dist"), col("harmonic"),
         col("ecc")),
       nfSeries.toSeq)

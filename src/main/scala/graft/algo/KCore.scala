@@ -32,7 +32,7 @@ object KCore {
           symEdges: DataFrame,
           k: Int,
           numPartitions: Int = 32,
-          maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 100): DataFrame = Superstep.scope(spark) {
 
     val start = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -78,7 +78,7 @@ object KCore {
             symWeighted: DataFrame,
             s: Long,
             numPartitions: Int = 32,
-            maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
+            maxIter: Int = 100): DataFrame = Superstep.scope(spark) {
 
     val start = Superstep.freshCheckpoint(
       symWeighted.select(col("src"), col("dst"), col("weight"))

@@ -48,7 +48,7 @@ object KTruss {
           symEdges: DataFrame,
           k: Int,
           numPartitions: Int = 32,
-          maxIter: Int = 100): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 100): DataFrame = Superstep.scope(spark) {
     require(k >= 2, s"k-truss needs k >= 2, got $k")
 
     var cur = Superstep.freshCheckpoint(
@@ -68,19 +68,18 @@ object KTruss {
     while (changed && iter < maxIter) {
       val sup = Superstep.freshCheckpoint(
         edgeSupport(cur, numPartitions), eager = false)
-      val keep = sup.filter(col("support") >= k - 2)
+      val strong = sup.filter(col("support") >= k - 2)
         .select(col("a").as("src"), col("b").as("dst"))
       val next = Superstep.freshCheckpoint(
-        cur.join(keep.hint("shuffle_hash"), Seq("src", "dst"), "left_semi"),
+        cur.join(strong.hint("shuffle_hash"), Seq("src", "dst"), "left_semi"),
         eager = false)
       val nextSize = next.count() // materializes the lazy checkpoints
-      gc.tick()
+      gc.tick(next, sup)
       changed = nextSize != size
       cur = next; size = nextSize; lastSup = sup; iter += 1
     }
     require(!changed,
       s"k-truss peeling did not stabilize within $maxIter rounds — raise maxIter")
-    gc.close(2) // keep BOTH survivors: cur and the lastSup it joins below
     val finalSup = if (lastSup != null) lastSup else edgeSupport(cur, numPartitions)
     cur.join(
         finalSup.select(col("a").as("src"), col("b").as("dst"), col("support")),

@@ -28,7 +28,7 @@ object Katz {
           alpha: Double = 0.05,
           beta: Double = 1.0,
           tol: Double = 0.0,
-          maxIter: Int = 20): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 20): Result = Superstep.scope(spark) {
 
     val e = Superstep.freshCheckpoint(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
@@ -39,7 +39,7 @@ object Katz {
 
     val (state, iters, converged) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(verts.select(col("id"), lit(beta).as("k")), eager = true),
-      maxIter, keep = 6) { st =>
+      maxIter) { st =>
       val inSum = e
         .join(st.hint("shuffle_hash"), e("src") === st("id"))
         .groupBy(e("dst").as("id")).agg(sum(col("k")).as("ksum"))
@@ -56,8 +56,6 @@ object Katz {
         Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
     }
-    Superstep.freeCheckpoint(e)
-    Superstep.freeCheckpoint(verts)
     Result(state, iters, converged)
   }
 }

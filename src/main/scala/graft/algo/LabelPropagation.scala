@@ -61,7 +61,7 @@ object LabelPropagation {
           maxIter: Int = 20,
           ckpt: Option[Superstep] = None,
           vertices: Option[DataFrame] = None,
-          weightCol: Option[String] = None): Result = Superstep.withoutAQE(spark) {
+          weightCol: Option[String] = None): Result = Superstep.scope(spark) {
 
     val e = symEdges.select(
         col("src") +: col("dst") +: weightCol.map(col).toSeq: _*)
@@ -115,7 +115,7 @@ object LabelPropagation {
              symEdges: DataFrame,
              seeds: DataFrame,
              rounds: Int,
-             numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+             numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     val e = symEdges.select(col("src"), col("dst"))
       .repartition(numPartitions, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)

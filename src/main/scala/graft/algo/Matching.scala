@@ -53,7 +53,8 @@ object Matching {
   def run(spark: SparkSession,
           symEdges: DataFrame,
           numPartitions: Int = 32,
-          maxIter: Int = 200): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 200): DataFrame = Superstep.scope(spark) {
+    val gc = new Superstep.CheckpointGC(spark)
     var e = Superstep.freshCheckpoint(
       symEdges.select(
           least(col("src"), col("dst")).as("u"),
@@ -63,8 +64,7 @@ object Matching {
         .repartition(numPartitions, col("u")), eager = true)
 
     var liveCount = e.count()
-    var out: DataFrame = null
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var out: DataFrame = null // lazily reads every round's winners
     var round = 0
 
     while (liveCount > 0 && round < maxIter) {
@@ -85,7 +85,6 @@ object Matching {
             .hint("shuffle_hash"), Seq("v"))
           .filter(col("k") <= col("mu") && col("k") <= col("mv"))
           .select(col("u"), col("v")), eager = true)
-      pinned += winners
 
       out = {
         val won = winners.withColumn("round", lit(round.toLong))
@@ -101,8 +100,8 @@ object Matching {
             Seq("u"), "left_anti")
           .join(matched.select(col("vid").as("v")).hint("shuffle_hash"),
             Seq("v"), "left_anti"), eager = true)
-      Superstep.freeCheckpoint(e)
       e = nextE
+      gc.tick(e, out)
       val nextCount = e.count()
       require(nextCount < liveCount,
         s"matching round $round made no progress ($liveCount live edges): " +
@@ -113,8 +112,6 @@ object Matching {
       s"matching did not settle within $maxIter rounds — raise maxIter")
     val res = out.localCheckpoint(false)
     res.count()
-    pinned.foreach(Superstep.freeCheckpoint)
-    Superstep.freeCheckpoint(e)
     res
   }
 
@@ -149,7 +146,8 @@ object Matching {
   def runWeighted(spark: SparkSession,
                   weightedEdges: DataFrame,
                   numPartitions: Int = 32,
-                  maxIter: Int = 200): DataFrame = Superstep.withoutAQE(spark) {
+                  maxIter: Int = 200): DataFrame = Superstep.scope(spark) {
+    val gc = new Superstep.CheckpointGC(spark)
     var e = Superstep.freshCheckpoint(
       weightedEdges.select(
           least(col("src"), col("dst")).as("u"),
@@ -161,8 +159,7 @@ object Matching {
         .repartition(numPartitions, col("u")), eager = true)
 
     var liveCount = e.count()
-    var out: DataFrame = null
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var out: DataFrame = null // lazily reads every round's winners
     var round = 0
 
     while (liveCount > 0 && round < maxIter) {
@@ -195,8 +192,6 @@ object Matching {
             .hint("shuffle_hash"), Seq("v"))
           .filter(col("k") <= col("ku") && col("k") <= col("kv"))
           .select(col("u"), col("v"), col("w")), eager = true)
-      Superstep.freeCheckpoint(cand)
-      pinned += winners
 
       out = {
         val won = winners.withColumn("round", lit(round.toLong))
@@ -210,8 +205,8 @@ object Matching {
             Seq("u"), "left_anti")
           .join(matched.select(col("vid").as("v")).hint("shuffle_hash"),
             Seq("v"), "left_anti"), eager = true)
-      Superstep.freeCheckpoint(e)
       e = nextE
+      gc.tick(e, out)
       val nextCount = e.count()
       require(nextCount < liveCount,
         s"weighted matching round $round made no progress " +
@@ -223,8 +218,6 @@ object Matching {
         "monotone weight chains serialize the peel; raise maxIter")
     val res = out.localCheckpoint(false)
     res.count()
-    pinned.foreach(Superstep.freeCheckpoint)
-    Superstep.freeCheckpoint(e)
     res
   }
 
@@ -264,7 +257,7 @@ object Matching {
   def coarsen(spark: SparkSession,
               weightedEdges: DataFrame,
               numPartitions: Int = 32,
-              strongOnly: Boolean = false): (DataFrame, DataFrame) = {
+              strongOnly: Boolean = false): (DataFrame, DataFrame) = Superstep.scope(spark) {
     val m0 = runWeighted(spark, weightedEdges, numPartitions)
     val m = if (!strongOnly) m0 else {
       val vmax = weightedEdges
@@ -286,8 +279,8 @@ object Matching {
     val vertices = weightedEdges
       .select(col("src").as("id")).unionAll(weightedEdges.select(col("dst").as("id")))
       .distinct()
-    // eager: the matching checkpoint is freed below, so the mapping
-    // must be materialized while m is still live
+    // eager: read twice below, and the matching checkpoint it is built
+    // from can then be freed on exit
     val mapping = Superstep.freshCheckpoint(vertices
       .join(pairMap.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"), coalesce(col("c"), col("id")).as("coarse_id")),
@@ -301,7 +294,6 @@ object Matching {
       .groupBy(least(col("cs"), col("cd")).as("src"),
         greatest(col("cs"), col("cd")).as("dst"))
       .agg(sum(col("weight").cast("long")).as("weight"))
-    Superstep.freeCheckpoint(m0)
     (mapping, coarse)
   }
 
@@ -312,13 +304,12 @@ object Matching {
     */
   def vertexCover(spark: SparkSession,
                   symEdges: DataFrame,
-                  numPartitions: Int = 32): DataFrame = {
+                  numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     val m = run(spark, symEdges, numPartitions)
     val cover = m.select(col("u").as("id"))
       .unionAll(m.select(col("v").as("id"))).distinct()
       .localCheckpoint(false)
     cover.count()
-    Superstep.freeCheckpoint(m)
     cover
   }
 }

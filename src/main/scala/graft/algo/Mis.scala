@@ -99,7 +99,8 @@ object Mis {
                      numPartitions: Int,
                      maxIter: Int,
                      removeNeighbors: Boolean): DataFrame =
-    Superstep.withoutAQE(spark) {
+    Superstep.scope(spark) {
+      val gc = new Superstep.CheckpointGC(spark)
       val base = symEdges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
       var e = Superstep.freshCheckpoint(
@@ -110,10 +111,7 @@ object Mis {
           .getOrElse(fromEdges), eager = true)
 
       var liveCount = live.count()
-      var out: DataFrame = null
-      // ownership: per-round winner frames stay pinned until the final
-      // union is checkpointed; live/e swap eager-successor-then-free
-      val winners = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var out: DataFrame = null // lazily reads every round's winners
       var round = 0
 
       while (liveCount > 0 && round < maxIter) {
@@ -126,7 +124,6 @@ object Mis {
           live.join(nbrMin.hint("shuffle_hash"), Seq("id"), "left")
             .filter(col("mn").isNull || key(col("id")) < col("mn"))
             .select(col("id")), eager = true)
-        winners += sel
 
         val won = sel.withColumn("round", lit(round.toLong))
         out = if (out == null) won else out.unionAll(won)
@@ -148,9 +145,8 @@ object Mis {
               Seq("src"), "left_semi")
             .join(nextLive.select(col("id").as("dst")).hint("shuffle_hash"),
               Seq("dst"), "left_semi"), eager = true)
-        Superstep.freeCheckpoint(live)
-        Superstep.freeCheckpoint(e)
         live = nextLive; e = nextE
+        gc.tick(live, e, out)
         val nextCount = live.count()
         // ties between adjacent survivors would stall forever — fail loud
         require(nextCount < liveCount,
@@ -162,9 +158,6 @@ object Mis {
         s"MIS did not settle within $maxIter rounds — raise maxIter")
       val res = out.localCheckpoint(false)
       res.count()
-      winners.foreach(Superstep.freeCheckpoint)
-      Superstep.freeCheckpoint(live)
-      Superstep.freeCheckpoint(e)
       res
     }
 }

@@ -79,7 +79,7 @@ object ModularityRefine {
           weighted: Boolean = false,
           earlyStop: Boolean = true,
           gammaNum: Long = 1L,
-          gammaDen: Long = 1L): Result = Superstep.withoutAQE(spark) {
+          gammaDen: Long = 1L): Result = Superstep.scope(spark) {
     // RB-configuration resolution γ = gammaNum/gammaDen (leidenalg's
     // RBConfigurationVertexPartition(resolution_parameter=γ),
     // community_detection.py:85-93): the move argmax compares
@@ -123,7 +123,7 @@ object ModularityRefine {
 
       if (earlyStop) {
         val changes = next.filter(col("community") =!= col("prev")).count()
-        gc.tick()
+        gc.tick(next)
         // a moveless phase ends the ascent only once BOTH directions
         // were still back-to-back (nobody moved down AND nobody moved
         // up on the same state ⇒ every vertex's best is its current)
@@ -133,7 +133,7 @@ object ModularityRefine {
       labels = next.select("id", "community")
       round += 1
     }
-    if (earlyStop) { e.unpersist(); deg.unpersist(); gc.close() }
+    if (earlyStop) { e.unpersist(); deg.unpersist() }
 
     val canon = labels.groupBy(col("community").as("c")).agg(min(col("id")).as("nc"))
     val out = labels.join(canon, labels("community") === col("c"))

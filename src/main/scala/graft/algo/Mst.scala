@@ -42,7 +42,8 @@ object Mst {
   def run(spark: SparkSession,
           weightedEdges: DataFrame,
           numPartitions: Int = 32,
-          maxIter: Int = 64): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 64): DataFrame = Superstep.scope(spark) {
+    val gc = new Superstep.CheckpointGC(spark)
     val canon = weightedEdges.select(
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"),
@@ -57,8 +58,7 @@ object Mst {
           col("u").as("cu"), col("v").as("cv"))
         .repartition(numPartitions, col("u")), eager = true)
     var eCount = e.count()
-    var out: DataFrame = null
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var out: DataFrame = null // lazily reads every round's picks
     var round = 0
 
     while (eCount > 0 && round < maxIter) {
@@ -75,7 +75,6 @@ object Mst {
           .select(col("comp"), col("s.other").as("other"),
             col("s.w").as("w"), col("s.u").as("u"), col("s.v").as("v")),
         eager = true)
-      pinned += picks
 
       val won = picks.select(col("u"), col("v"), col("w")).distinct()
       out = if (out == null) won else out.unionAll(won)
@@ -100,11 +99,8 @@ object Mst {
             coalesce(col("ncu"), col("cu")).as("cu"),
             coalesce(col("ncv"), col("cv")).as("cv"))
           .filter(col("cu") =!= col("cv")), eager = true)
-      Superstep.freeCheckpoint(e)
-      // the relabel is materialized, so the CC mapping can go now;
-      // picks stay pinned (the forest union still references them)
-      Superstep.freeCheckpoint(mapping)
       e = nextE
+      gc.tick(e, out)
       val nextCount = e.count()
       require(nextCount < eCount,
         s"Borůvka round $round made no progress ($eCount cross edges)")
@@ -116,8 +112,6 @@ object Mst {
       .withColumnRenamed("w", "weight")
       .localCheckpoint(false)
     res.count()
-    pinned.foreach(Superstep.freeCheckpoint)
-    Superstep.freeCheckpoint(e)
     res
   }
 
@@ -150,17 +144,10 @@ object Mst {
       changed = next.join(par.withColumnRenamed("par", "old")
           .hint("shuffle_hash"), Seq("id"))
         .filter(col("par") =!= col("old")).count()
-      Superstep.freeCheckpoint(par)
       par = next
     }
     require(changed == 0, "Borůvka contraction did not converge in 64 jumps")
-    // re-checkpoint under the output names so the caller's
-    // freeCheckpoint (which matches a top-level LogicalRDD) can
-    // reclaim it; comp-sized, negligible
-    val res = Superstep.freshCheckpoint(
-      par.select(col("id"), col("par").as("component")), eager = true)
-    Superstep.freeCheckpoint(par)
-    res
+    par.select(col("id"), col("par").as("component"))
   }
 
   /** Single-linkage clustering at a distance threshold: cut the MSF
@@ -175,7 +162,7 @@ object Mst {
   def singleLinkage(spark: SparkSession,
                     weightedEdges: DataFrame,
                     threshold: Long,
-                    numPartitions: Int = 32): DataFrame = {
+                    numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     val forest = run(spark, weightedEdges, numPartitions)
     val verts = weightedEdges.select(col("src").as("id"))
       .unionAll(weightedEdges.select(col("dst").as("id"))).distinct()
@@ -183,7 +170,6 @@ object Mst {
       .select(col("u").as("src"), col("v").as("dst"))
     val labels = ConnectedComponents.run(spark, cut, Some(verts),
       numPartitions)
-    Superstep.freeCheckpoint(forest)
     labels.select(col("id"), col("component").as("cluster"))
   }
 }

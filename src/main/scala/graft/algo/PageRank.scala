@@ -20,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   *  - the contribution aggregation is a partial (map-side) + final agg
   *    on `dst`, so skewed in-degree vertices combine locally before the
   *    shuffle;
-  *  - AQE is disabled for the loop (see Superstep.withoutAQE) so the
+  *  - AQE is disabled for the loop (see Superstep.withoutAQE, entered through Superstep.scope) so the
   *    checkpointed state keeps its known hash-partitioning and both
   *    per-iteration joins are exchange-free shuffle-hash joins;
   *  - state is localCheckpoint'ed each superstep (plan truncation) and
@@ -58,7 +58,7 @@ object PageRank {
           ckpt: Option[Superstep] = None,
           weighted: Boolean = false,
           seeds: Option[DataFrame] = None,
-          init: Option[DataFrame] = None): Result = Superstep.withoutAQE(spark) {
+          init: Option[DataFrame] = None): Result = Superstep.scope(spark) {
     require(seeds.isEmpty || ckpt.isEmpty,
       "personalized PageRank does not support checkpoint/resume")
     require(init.isEmpty || (seeds.isEmpty && ckpt.isEmpty),
@@ -265,7 +265,7 @@ object PageRank {
                         seedSets: DataFrame,
                         numPartitions: Int,
                         iters: Int = 5,
-                        damping: Double = 0.85): DataFrame = Superstep.withoutAQE(spark) {
+                        damping: Double = 0.85): DataFrame = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
         .repartition(numPartitions, col("src")), eager = true)
@@ -287,7 +287,7 @@ object PageRank {
       .select(col("id"), col("sid"), col("outDeg"), col("s").as("rank"))
       .repartition(numPartitions, col("id"))
     val (state, _, _) = Superstep.iterate(spark,
-        Superstep.freshCheckpoint(start, eager = true), iters, keep = 4) { st =>
+        Superstep.freshCheckpoint(start, eager = true), iters) { st =>
       val dgl = st.filter(col("outDeg") === 0)
         .groupBy(col("sid")).agg(sum(col("rank")).as("dang"))
       val contribs = e
@@ -314,10 +314,7 @@ object PageRank {
           .select(col("id"), col("sid"), col("outDeg"), col("rank"))
           .repartition(numPartitions, col("id")), eager = true))
     }
-    val out = state.select(col("sid"), col("id"), col("rank"))
-      .localCheckpoint(true)
-    Seq(e, deg, state).foreach(Superstep.freeCheckpoint)
-    out
+    state.select(col("sid"), col("id"), col("rank")).localCheckpoint(true)
   }
 
   /** Multi-class node classification from [[batchPersonalized]]:

@@ -55,7 +55,7 @@ object Pic {
           k: Int,
           iters: Int = 5,
           numPartitions: Int = 32,
-          seedMod: Long = 97L): DataFrame = Superstep.withoutAQE(spark) {
+          seedMod: Long = 97L): DataFrame = Superstep.scope(spark) {
     require(k >= 2, "PIC needs k >= 2")
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -78,7 +78,7 @@ object Pic {
     val (v, _, _) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(
         seeded.select(col("id"), (col("s") / s1).as("v")), eager = true),
-      iters, keep = 3) { cur =>
+      iters) { cur =>
       // u = D⁻¹ A v, then L1-normalize (all values stay positive)
       val msgs = cur.join(e.hint("shuffle_hash"), cur("id") === e("src"))
         .select(e("dst").as("id"), col("v").as("m"))
@@ -93,7 +93,6 @@ object Pic {
     val emb = Superstep.freshCheckpoint(
       v.select(col("id"),
         round(col("v") * n.toDouble * 1e6, 0).cast("long").as("emb")), eager = true)
-    Superstep.freeCheckpoint(v)
 
     // ── largest-gap split without a global window ──
     val ranged = emb.repartitionByRange(numPartitions, col("emb"), col("id"))
@@ -122,8 +121,6 @@ object Pic {
     }
     val out = emb.select(col("id"), col("emb"),
       clusterExpr.cast("int").as("cluster"))
-    val res = Superstep.freshCheckpoint(out, eager = true)
-    Seq(e, deg, emb).foreach(Superstep.freeCheckpoint)
-    res
+    Superstep.freshCheckpoint(out, eager = true)
   }
 }

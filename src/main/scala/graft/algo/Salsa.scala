@@ -48,7 +48,7 @@ object Salsa {
           edges: DataFrame,
           numPartitions: Int = 32,
           tol: Double = 0.0,
-          maxIter: Int = 20): Result = Superstep.withoutAQE(spark) {
+          maxIter: Int = 20): Result = Superstep.scope(spark) {
 
     val e0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -77,7 +77,7 @@ object Salsa {
     val (state, iters, converged) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(
         verts.select(col("id"), lit(1.0).as("h"), lit(1.0).as("a")), eager = true),
-      maxIter, keep = 8) { st =>
+      maxIter) { st =>
       // authority chain: gather a·inv_in back over each edge, scatter
       // forward scaled by inv_out
       val t = eDst
@@ -122,9 +122,6 @@ object Salsa {
         Superstep.Step(next, delta < tol, Map("delta" -> delta))
       }
     }
-    Superstep.freeCheckpoint(eSrc)
-    Superstep.freeCheckpoint(eDst)
-    Superstep.freeCheckpoint(verts)
     Result(state.select(col("id"), col("h").as("hub"), col("a").as("auth")),
       iters, converged)
   }

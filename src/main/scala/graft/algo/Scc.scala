@@ -33,11 +33,9 @@ import org.apache.spark.sql.functions._
   * case (a chain of 2-cycles) degrades to O(V) rounds like every
   * label-propagation SCC; pivot-BFS hybrids fix that, out of scope.
   *
-  * Checkpoint lifecycle is explicit (no CheckpointGC): the long-lived
-  * frames (edges, vertices, settled) are replaced via [[swap]] — the
-  * successor is EAGERLY materialized before its predecessor's blocks
-  * are freed — and inner-loop frames are freed as soon as their last
-  * reader has materialized.
+  * Every frame is an eager checkpoint; after each inner round one
+  * [[Superstep.CheckpointGC]] sweep keeps only the graph state (edges,
+  * vertices, settled) and the frames the running phase still reads.
   */
 object Scc {
 
@@ -47,15 +45,10 @@ object Scc {
   def run(spark: SparkSession,
           edges: DataFrame,
           numPartitions: Int = 32,
-          maxIter: Int = 10000): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 10000): DataFrame = Superstep.scope(spark) {
 
     def chk(df: DataFrame): DataFrame = Superstep.freshCheckpoint(df, eager = true)
-    // eager-checkpoint the successor, then release the predecessor
-    def swap(old: DataFrame, next: DataFrame): DataFrame = {
-      val c = chk(next)
-      Superstep.freeCheckpoint(old)
-      c
-    }
+    val gc = new Superstep.CheckpointGC(spark)
 
     var e = chk(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
@@ -64,6 +57,8 @@ object Scc {
       e.select(col("src").as("id")).unionAll(e.select(col("dst").as("id")))
         .distinct().repartition(numPartitions, col("id")))
     var settled = chk(verts.filter(lit(false)).select(col("id"), col("id").as("scc")))
+    // free everything but the graph state and the running phase's frames
+    def sweep(phase: DataFrame*): Unit = gc.tick(Seq(e, verts, settled) ++ phase: _*)
 
     var budget = maxIter
     def spend(): Unit = {
@@ -73,9 +68,9 @@ object Scc {
 
     // settle `group` (id, scc): fold into the accumulator, peel the graph
     def settle(group: DataFrame, n: Long, remaining: Long): Long = {
-      settled = swap(settled, settled.unionByName(group))
-      verts = swap(verts, verts.join(group.select(col("id")), Seq("id"), "left_anti"))
-      e = swap(e,
+      settled = chk(settled.unionByName(group))
+      verts = chk(verts.join(group.select(col("id")), Seq("id"), "left_anti"))
+      e = chk(
         e.join(group.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(group.select(col("id").as("dst")), Seq("dst"), "left_anti")
           .select(col("src"), col("dst"))
@@ -99,7 +94,7 @@ object Scc {
           remaining = settle(trivial.select(col("id"), col("id").as("scc")),
             nTrivial, remaining)
         } else trimming = false
-        Superstep.freeCheckpoint(trivial)
+        sweep()
       }
 
       if (remaining > 0) {
@@ -117,8 +112,8 @@ object Scc {
                 least(col("c"), coalesce(col("cin"), col("c"))).as("c"),
                 coalesce(col("cin") < col("c"), lit(false)).as("chg")))
           changing = next.filter(col("chg")).count() > 0
-          color = swap(color, next.select(col("id"), col("c")))
-          Superstep.freeCheckpoint(next)
+          color = chk(next.select(col("id"), col("c")))
+          sweep(color)
         }
 
         // -- 3. backward settled-bit within the color class -------------
@@ -140,25 +135,19 @@ object Scc {
               .select(sameColorEdges("src").as("id")).distinct()
               .join(reach, Seq("id"), "left_anti"))
           frontierN = fresh.count()
-          if (frontier ne reach) Superstep.freeCheckpoint(frontier)
-          if (frontierN > 0) reach = swap(reach, reach.unionByName(fresh))
+          if (frontierN > 0) reach = chk(reach.unionByName(fresh))
           frontier = fresh
+          sweep(color, sameColorEdges, reach, frontier)
         }
-        Superstep.freeCheckpoint(frontier) // the final empty one
 
         // -- 4. settle SCC members, peel --------------------------------
         val members = chk(
           color.join(reach, Seq("id")).select(col("id"), col("c").as("scc")))
         val nMembers = members.count()
         remaining = settle(members, nMembers, remaining)
-        Superstep.freeCheckpoint(members)
-        Superstep.freeCheckpoint(reach)
-        Superstep.freeCheckpoint(sameColorEdges)
-        Superstep.freeCheckpoint(color)
+        sweep()
       }
     }
-    Superstep.freeCheckpoint(e)
-    Superstep.freeCheckpoint(verts)
     settled
   }
 

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * iterations, regardless of diameter. Rounds = eccentricity of the
   * landmark set (small on web-ish graphs). State and frontier are
   * `freshCheckpoint`ed per round with [[Superstep.CheckpointGC]]
-  * reclaiming superseded blocks, exactly as in
+  * reclaiming superseded blocks, as in
   * [[ConnectedComponents]]. Re-checkpointing the append-only state
   * each round costs one extra state-sized write per round (diameter×
   * amplification on the skinny 3-long rows) and buys a self-contained
@@ -48,7 +48,7 @@ object ShortestPaths {
           symEdges: DataFrame,
           landmarks: Seq[Long],
           numPartitions: Int = 32,
-          maxIter: Int = 256): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 256): DataFrame = Superstep.scope(spark) {
     require(landmarks.nonEmpty, "ShortestPaths needs at least one landmark")
     import spark.implicits._
 
@@ -63,7 +63,7 @@ object ShortestPaths {
     var frontier = state
     var frontierSize = frontier.count()
     var iter = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
+    val gc = new Superstep.CheckpointGC(spark)
 
     while (frontierSize > 0 && iter < maxIter) {
       // dist+1 to every neighbor of the frontier; min-reduce is
@@ -83,16 +83,11 @@ object ShortestPaths {
         state = Superstep.freshCheckpoint(state.unionByName(next), eager = true)
       }
       frontier = next
-      gc.tick()
+      gc.tick(state, frontier)
       iter += 1
     }
     require(frontierSize == 0,
       s"BFS frontier still live after $maxIter rounds — raise maxIter")
-    // the newest loop-created checkpoint is the EMPTY final frontier,
-    // created after the last state union — keep 2 so the returned
-    // state survives the sweep
-    gc.close(keepLatest = 2)
-    Superstep.freeCheckpoint(edges)
     state
   }
 
@@ -116,7 +111,7 @@ object ShortestPaths {
                edges: DataFrame,
                landmarks: Seq[Long],
                numPartitions: Int = 32,
-               maxIter: Int = 512): DataFrame = Superstep.withoutAQE(spark) {
+               maxIter: Int = 512): DataFrame = Superstep.scope(spark) {
     require(landmarks.nonEmpty, "ShortestPaths needs at least one landmark")
     import spark.implicits._
 
@@ -131,7 +126,7 @@ object ShortestPaths {
     var frontier = state
     var frontierSize = frontier.count()
     var iter = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
+    val gc = new Superstep.CheckpointGC(spark)
 
     while (frontierSize > 0 && iter < maxIter) {
       val candidates = frontier
@@ -154,13 +149,11 @@ object ShortestPaths {
             .agg(min(col("dist")).as("dist")), eager = true)
       }
       frontier = improved
-      gc.tick()
+      gc.tick(state, frontier)
       iter += 1
     }
     require(frontierSize == 0,
       s"Bellman-Ford still improving after $maxIter rounds — raise maxIter")
-    gc.close(keepLatest = 2)
-    Superstep.freeCheckpoint(e)
     state
   }
 
@@ -200,7 +193,7 @@ object ShortestPaths {
                       seeds: DataFrame,
                       startTime: Long,
                       numPartitions: Int = 32,
-                      maxIter: Int = 512): DataFrame = Superstep.withoutAQE(spark) {
+                      maxIter: Int = 512): DataFrame = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       temporalEdges.select(col("src"), col("dst"), col("ts").cast("long"))
         .filter(col("src") =!= col("dst"))
@@ -213,7 +206,7 @@ object ShortestPaths {
     var frontier = state
     var frontierSize = frontier.count()
     var iter = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
+    val gc = new Superstep.CheckpointGC(spark)
 
     while (frontierSize > 0 && iter < maxIter) {
       val candidates = frontier
@@ -235,13 +228,11 @@ object ShortestPaths {
             .agg(min(col("arrival")).as("arrival")), eager = true)
       }
       frontier = improved
-      gc.tick()
+      gc.tick(state, frontier)
       iter += 1
     }
     require(frontierSize == 0,
       s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
-    gc.close(keepLatest = 2)
-    Superstep.freeCheckpoint(e)
     state
   }
 
@@ -271,7 +262,7 @@ object ShortestPaths {
                       targets: DataFrame,
                       deadline: Long,
                       numPartitions: Int = 32,
-                      maxIter: Int = 512): DataFrame = Superstep.withoutAQE(spark) {
+                      maxIter: Int = 512): DataFrame = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       temporalEdges.select(col("src"), col("dst"), col("ts").cast("long"))
         .filter(col("src") =!= col("dst"))
@@ -284,7 +275,7 @@ object ShortestPaths {
     var frontier = state
     var frontierSize = frontier.count()
     var iter = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
+    val gc = new Superstep.CheckpointGC(spark)
 
     while (frontierSize > 0 && iter < maxIter) {
       val candidates = frontier
@@ -307,13 +298,11 @@ object ShortestPaths {
             .agg(max(col("departure")).as("departure")), eager = true)
       }
       frontier = improved
-      gc.tick()
+      gc.tick(state, frontier)
       iter += 1
     }
     require(frontierSize == 0,
       s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
-    gc.close(keepLatest = 2)
-    Superstep.freeCheckpoint(e)
     state
   }
 
@@ -356,7 +345,7 @@ object ShortestPaths {
                       seeds: DataFrame,
                       startTime: Long,
                       numPartitions: Int = 32,
-                      maxIter: Int = 512): DataFrame = Superstep.withoutAQE(spark) {
+                      maxIter: Int = 512): DataFrame = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       temporalEdges.select(col("src"), col("dst"), col("ts").cast("long"))
         .filter(col("src") =!= col("dst"))
@@ -388,7 +377,7 @@ object ShortestPaths {
     var frontier = state
     var frontierSize = frontier.count()
     var iter = 0
-    val gc = new Superstep.CheckpointGC(spark, keep = 6)
+    val gc = new Superstep.CheckpointGC(spark)
 
     while (frontierSize > 0 && iter < maxIter) {
       val candidates = frontier
@@ -406,20 +395,17 @@ object ShortestPaths {
       frontierSize = improved.count() // materializes the lazy checkpoint
       state = merged
       frontier = improved
-      gc.tick()
+      gc.tick(state, frontier)
       iter += 1
     }
     require(frontierSize == 0,
       s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
 
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       state.select(col("id"), (col("a") - col("d")).as("duration"))
         .unionByName(sd.select(col("id"), lit(0L).as("duration")))
         .groupBy(col("id")).agg(min(col("duration")).as("duration")),
       eager = true)
-    gc.close(keepLatest = 1) // `out` is the newest loop-scope checkpoint
-    Seq(e, sd).foreach(Superstep.freeCheckpoint)
-    out
   }
 
   /** Graph Voronoi cells: every vertex assigned to its NEAREST

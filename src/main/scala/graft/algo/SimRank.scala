@@ -46,7 +46,7 @@ object SimRank {
           maxIter: Int = 5,
           numPartitions: Int = 32,
           maxInDegree: Long = 64,
-          maxCenterOutDegree: Long = 256): Result = Superstep.withoutAQE(spark) {
+          maxCenterOutDegree: Long = 256): Result = Superstep.scope(spark) {
 
     val e = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
@@ -81,7 +81,7 @@ object SimRank {
     val (scores, iters, _) = Superstep.iterate(spark,
       Superstep.freshCheckpoint(
         pairs.select(col("a"), col("b"), lit(0.0).as("s")), eager = true),
-      maxIter, keep = 4) { prev =>
+      maxIter) { prev =>
       val withI = pairs
         .join(inE.select(col("v").as("a"), col("n").as("i")).hint("shuffle_hash"),
           Seq("a"))
@@ -105,8 +105,6 @@ object SimRank {
             (lit(c) / (col("ia") * col("ib")) * col("t")).as("s")),
         eager = true))
     }
-    Superstep.freeCheckpoint(pairs)
-    Superstep.freeCheckpoint(inE)
     Result(scores, iters)
   }
 }

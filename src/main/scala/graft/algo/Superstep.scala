@@ -1,6 +1,6 @@
 package graft.algo
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,8 +20,30 @@ import org.apache.spark.sql.functions._
   * `save` writes the state, re-reads it (truncating the Catalyst plan —
   * without this the per-iteration plan grows unboundedly), computes the
   * per-partition lineage of what was actually persisted, and only then
-  * advances the `_LATEST` marker, so a kill mid-write resumes from the
-  * previous complete superstep.
+  * advances the `_LATEST` marker — written to a sibling temp file and
+  * renamed over the old marker atomically — so a kill mid-write
+  * resumes from the previous complete superstep.
+  *
+  * Storage lifetime. `localCheckpoint` pins its blocks until the RDD
+  * is unpersisted, and one rule, applied only here, decides when:
+  * '''a local checkpoint stays pinned exactly while a named root can
+  * reach it'''. "Reach" means the checkpoint is a `LogicalRDD` leaf
+  * of the root's analyzed plan (subqueries included) or lies in the
+  * RDD dependency closure of such a leaf — an unmaterialized lazy
+  * checkpoint still reads its inputs. The rule runs at two levels:
+  * [[Superstep.scope]] on a run's exit (roots = the returned frames)
+  * and [[Superstep.CheckpointGC]]`.tick` after each loop round (roots =
+  * the loop-carried frames). Only checkpoints created inside the
+  * scope or loop are candidates, so a caller's frames always survive.
+  *
+  *  - It frees local checkpoints only. `Dataset.persist` caches keep
+  *    their owner's `unpersist()`: releasing one behind the
+  *    CacheManager's back would leave a stale cache entry that later
+  *    plans still substitute.
+  *  - It assumes one driver thread builds checkpoints against the
+  *    SparkContext at a time: "created inside" is the set of
+  *    persistent RDDs that appeared since entry, so a checkpoint a
+  *    concurrent thread makes meanwhile would count as this run's.
   */
 object Superstep {
 
@@ -62,42 +84,49 @@ object Superstep {
     ids.foreach(id => now.get(id).foreach(_.unpersist(false)))
   }
 
-  /** Frees superseded localCheckpoint state RDDs.
-    *
-    * `Dataset.localCheckpoint` pins its RDD in the block manager for
-    * the session's lifetime; an iterative loop that checkpoints every
-    * superstep would otherwise accumulate one pinned copy of the state
-    * per iteration and slowly starve the executor storage pool
-    * (observed: unrelated queries 10× slower after a long PageRank run
-    * in the same session). Construct AFTER the loop's own long-lived
-    * caches; `tick()` after each checkpoint frees all loop-created
-    * persistent RDDs except the newest `keep`.
+  /** The frames a scope's value hands back: the value itself, or the
+    * DataFrame fields of a case class, tuple or collection.
     */
-  final class CheckpointGC(spark: SparkSession, keep: Int = 2) {
-    private val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    private val exempted = scala.collection.mutable.Set.empty[Int]
-    /** Exclude a mid-loop checkpoint from the age-ordered sweep — for
-      * frames with a DIFFERENT lifetime than the state chain (e.g. a
-      * contracted active-edge set that every later round reads). The
-      * caller owns freeing it (freeCheckpoint) when superseded.
+  private def frames(v: Any): Seq[DataFrame] = v match {
+    case d: org.apache.spark.sql.Dataset[_] => Seq(d.toDF())
+    case it: Iterable[_] => it.iterator.flatMap(frames).toSeq
+    case p: Product => p.productIterator.flatMap(frames).toSeq
+    case _ => Nil
+  }
+
+  /** The lifetime rule over the local checkpoints created since
+    * construction. `Dataset.localCheckpoint` pins its RDD until it is
+    * unpersisted; a loop that checkpoints every superstep would
+    * otherwise hold one copy of its state per round and slowly starve
+    * the executor storage pool (observed: unrelated queries 10× slower
+    * after a long PageRank run in the same session).
+    */
+  final class CheckpointGC(spark: SparkSession) {
+    private val preexisting = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+    /** Unpersist every local checkpoint created since construction
+      * that none of `roots` can reach. A loop calls it after each round
+      * naming every frame the next round reads that the loop made
+      * (`tick(state, frontier)`). `Dataset.persist` caches are never
+      * touched.
       */
-    def exempt(df: org.apache.spark.sql.DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => exempted += l.rdd.id
-        case _ => ()
+    def tick(roots: DataFrame*): Unit = {
+      val live = org.apache.spark.sql.graft.CheckpointStats.reachableRdds(roots)
+      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!preexisting(id) && !live(id) &&
+            org.apache.spark.sql.graft.CheckpointStats.isLocalCheckpoint(rdd))
+          rdd.unpersist(blocking = false)
       }
-    def tick(): Unit = {
-      val now = spark.sparkContext.getPersistentRDDs
-      val created = (now.keySet -- preexisting -- exempted).toList.sorted
-      created.dropRight(keep).foreach(id => now.get(id).foreach(_.unpersist(false)))
     }
-    /** Free everything the loop created (call on exit, after the final
-      * state has been consumed or durably saved). Exempted frames are
-      * still skipped — their owner frees them.
+
+    /** Unpersist every persistent RDD created since construction —
+      * `Dataset.persist` caches included — except the newest
+      * `keepLatest`: the between-repetitions teardown of the bench
+      * harnesses (`close(0)`).
       */
     def close(keepLatest: Int = 1): Unit = {
       val now = spark.sparkContext.getPersistentRDDs
-      val created = (now.keySet -- preexisting -- exempted).toList.sorted
+      val created = (now.keySet -- preexisting).toList.sorted
       created.dropRight(keepLatest).foreach(id => now.get(id).foreach(_.unpersist(false)))
     }
   }
@@ -120,32 +149,31 @@ object Superstep {
     *  - resume: when `ckpt` holds a committed superstep the loop starts
     *    from that state and step number, and `start` is never
     *    evaluated; resumed steps count toward `maxIter` and the result;
-    *  - storage: a [[CheckpointGC]] built after the start state (which,
-    *    with any cache its evaluation fills, stays the caller's) frees
-    *    every checkpoint the steps create except the newest `keep`
-    *    after each step, and all but the newest on exit;
+    *  - storage: a [[CheckpointGC]] built before the start state is
+    *    evaluated frees, after each step, every checkpoint the start
+    *    and the steps created that the new state cannot reach;
     *  - durability: every `ckpt.every` steps, and at convergence, the
     *    state is saved with the step's metrics and the loop continues
     *    from the re-read copy;
-    *  - materialize-before-close: a final state that is still an
+    *  - materialize-before-sweep: a final state that is still an
     *    unmaterialized lazy checkpoint (a step with no measuring action)
-    *    is counted before the sweep, since the sweep frees the frames
-    *    its lineage reads. A measured or eagerly checkpointed state
-    *    costs no extra job.
+    *    is counted before the last sweep, so its ancestors are freed
+    *    rather than kept reachable. A measured or eagerly checkpointed
+    *    state costs no extra job.
     *
     * Convergence policy: `iterate` never hides a cap stop — the flag
     * is returned, and each caller either reports it in its result
     * (PageRank, LPA, the power iterations) or throws (CC and the
     * peeling loops, whose partial answer would be wrong, not just
     * imprecise). It adds no Spark job per superstep and changes no
-    * AQE setting; callers keep their run-level [[withoutAQE]] scope.
+    * AQE setting; callers keep their run-level [[scope]].
     */
   def iterate(spark: SparkSession, start: => DataFrame, maxIter: Int,
-              keep: Int = 2, ckpt: Option[Superstep] = None)
+              ckpt: Option[Superstep] = None)
              (step: DataFrame => Step): (DataFrame, Int, Boolean) = {
+    val gc = new CheckpointGC(spark)
     val resumed = ckpt.flatMap(_.resume())
     var state = resumed.fold(start)(_._2)
-    val gc = new CheckpointGC(spark, keep)
     var steps = resumed.fold(0)(_._1)
     var converged = false
     while (steps < maxIter && !converged) {
@@ -153,7 +181,7 @@ object Superstep {
       steps += 1
       converged = s.converged
       state = s.state
-      gc.tick()
+      gc.tick(state)
       ckpt.foreach { c =>
         if (steps % c.every == 0 || converged)
           state = c.save(steps, state, s.metrics)
@@ -161,8 +189,26 @@ object Superstep {
     }
     if (!org.apache.spark.sql.graft.CheckpointStats.materialized(state))
       state.count()
-    gc.close()
+    gc.tick(state)
     (state, steps, converged)
+  }
+
+  /** The run-level entry of every superstep algorithm: runs `f` with
+    * AQE disabled ([[withoutAQE]]) and, on exit — normal or thrown —
+    * frees every local checkpoint created inside it that the returned
+    * value cannot reach. The roots are the value itself if it is a
+    * DataFrame, or its DataFrame fields if it is a case class, tuple or
+    * collection; a throw has no roots, so it frees everything the run
+    * checkpointed. Frames the caller made before the call survive.
+    */
+  def scope[T](spark: SparkSession)(f: => T): T = withoutAQE(spark) {
+    val gc = new CheckpointGC(spark)
+    var roots = Seq.empty[DataFrame]
+    try {
+      val out = f
+      roots = frames(out)
+      out
+    } finally gc.tick(roots: _*)
   }
 
   /** Run `f` with AQE disabled. Inside a superstep loop AQE is a
@@ -235,8 +281,10 @@ final class Superstep(spark: SparkSession, dir: String, val every: Int = 5) {
       json.getBytes("UTF-8"),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
 
-    Files.write(latestPath, step.toString.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    // commit: a rename never exposes a truncated marker to `latest()`
+    val tmp = base.resolve("_LATEST.tmp")
+    Files.write(tmp, step.toString.getBytes("UTF-8"))
+    Files.move(tmp, latestPath, StandardCopyOption.ATOMIC_MOVE)
     reread
   }
 }

@@ -37,7 +37,8 @@ object Topology {
              vertices: Option[DataFrame] = None,
              numPartitions: Int = 32,
              maxIter: Int = 100000): DataFrame =
-    Superstep.withoutAQE(spark) {
+    Superstep.scope(spark) {
+      val gc = new Superstep.CheckpointGC(spark)
       val base = edges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst"))
       var e = Superstep.freshCheckpoint(
@@ -49,8 +50,7 @@ object Topology {
           .getOrElse(fromEdges), eager = true)
 
       var liveCount = live.count()
-      var out: DataFrame = null
-      val layerFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var out: DataFrame = null // lazily reads every layer's sources
       var layer = -1L
 
       while (liveCount > 0 && layer + 1 < maxIter) {
@@ -62,7 +62,6 @@ object Topology {
         val sources = Superstep.freshCheckpoint(
           live.join(hasIn.hint("shuffle_hash"), Seq("id"), "left_anti"),
           eager = true)
-        layerFrames += sources
         val won = sources.withColumn("layer", lit(layer))
         out = if (out == null) won else out.unionAll(won)
 
@@ -72,9 +71,8 @@ object Topology {
         val nextE = Superstep.freshCheckpoint(
           e.join(nextLive.select(col("id").as("src")).hint("shuffle_hash"),
             Seq("src"), "left_semi"), eager = true)
-        Superstep.freeCheckpoint(live)
-        Superstep.freeCheckpoint(e)
         live = nextLive; e = nextE
+        gc.tick(live, e, out)
         val nextCount = live.count()
         require(nextCount < liveCount,
           s"not a DAG: $nextCount vertices remain after layer $layer with " +
@@ -86,9 +84,6 @@ object Topology {
         s"topological layering did not settle within $maxIter rounds")
       val res = out.localCheckpoint(false)
       res.count()
-      layerFrames.foreach(Superstep.freeCheckpoint)
-      Superstep.freeCheckpoint(live)
-      Superstep.freeCheckpoint(e)
       res
     }
 }

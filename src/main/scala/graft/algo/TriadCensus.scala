@@ -65,7 +65,7 @@ object TriadCensus {
   def run(spark: SparkSession,
           edges: DataFrame,
           vertices: Option[DataFrame] = None,
-          numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+          numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     val e = Superstep.freshCheckpoint(
       edges.select(col("src"), col("dst"))
         .filter(col("src") =!= col("dst")).distinct()
@@ -268,7 +268,6 @@ object TriadCensus {
     val schema = StructType(Seq(
       StructField("triad", StringType, nullable = false),
       StructField("cnt", DecimalType(38, 0), nullable = false)))
-    Seq(e, codes, vc, tri, classified).foreach(Superstep.freeCheckpoint)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
   }

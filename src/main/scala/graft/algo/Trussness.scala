@@ -39,7 +39,7 @@ object Trussness {
   def run(spark: SparkSession,
           symEdges: DataFrame,
           numPartitions: Int = 32,
-          maxIter: Int = 50): DataFrame = Superstep.withoutAQE(spark) {
+          maxIter: Int = 50): DataFrame = Superstep.scope(spark) {
 
     val pairs = Superstep.freshCheckpoint(
       symEdges.filter(col("src") =!= col("dst"))
@@ -97,7 +97,6 @@ object Trussness {
     }
     require(converged,
       s"trussness refinement did not converge within $maxIter rounds")
-    Superstep.freeCheckpoint(inc)
     state.select(col("u").as("src"), col("v").as("dst"),
       col("t").as("trussness"))
   }

@@ -74,7 +74,7 @@ object Wl {
              symEdges: DataFrame,
              rounds: Int,
              numPartitions: Int = 32): DataFrame =
-    Superstep.withoutAQE(spark) {
+    Superstep.scope(spark) {
       require(rounds >= 0, "rounds must be >= 0")
       val e = Superstep.freshCheckpoint(
         symEdges.select(col("src"), col("dst"))
@@ -90,7 +90,7 @@ object Wl {
               pmod(col("d"), lit(P1)).as("c1"),
               pmod(col("d"), lit(P2)).as("c2"))
             .repartition(numPartitions, col("id")), eager = true),
-        rounds, keep = 3) { cur =>
+        rounds) { cur =>
         // per-neighbor mix, then a commutative decimal sum per vertex
         // (map-side partial agg; DECIMAL(38,0) cannot overflow below
         // 10^38 ≈ 2^126 — no ANSI trap at any hub degree)
@@ -111,11 +111,9 @@ object Wl {
           eager = true))
       }
 
-      val out = Superstep.freshCheckpoint(
+      Superstep.freshCheckpoint(
         state.select(col("id"), col("c1"), col("c2"),
           (col("c1") * P2 + col("c2")).as("color")), eager = true)
-      Seq(e, state).foreach(Superstep.freeCheckpoint)
-      out
     }
 
   /** Stable-partition summary: one row per color class with its size —

@@ -64,7 +64,7 @@ object RandomWalks {
           starts: DataFrame,
           walksPerVertex: Int = 2,
           walkLength: Int = 8,
-          numPartitions: Int = 32): DataFrame = Superstep.withoutAQE(spark) {
+          numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     require(walksPerVertex > 0 && walkLength > 0)
 
     val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
@@ -87,10 +87,9 @@ object RandomWalks {
       eager = true)
     var finished = state.filter(lit(false))
 
-    // `finished` lazily references every step's state frame, so keep
-    // all of a walk's checkpoints live until the final materialization
-    // (walks are short; the close() below reclaims everything at once)
-    val gc = new Superstep.CheckpointGC(spark, keep = walkLength + 4)
+    // `finished` lazily references every step's state frame: naming it
+    // keeps them until the final materialization
+    val gc = new Superstep.CheckpointGC(spark)
     var t = 0
     while (t < walkLength) {
       val withPick = state
@@ -111,17 +110,13 @@ object RandomWalks {
           concat(col("path"), array(ranked("dst"))).as("path"),
           ranked("dst").as("cur"))
       state = Superstep.freshCheckpoint(stepped, eager = true)
-      gc.tick()
+      gc.tick(state, finished)
       t += 1
     }
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       state.unionByName(finished)
         .select(col("start"), col("replica"), col("path")),
       eager = true)
-    gc.close(keepLatest = 1)
-    Superstep.freeCheckpoint(ranked)
-    Superstep.freeCheckpoint(degs)
-    out
   }
 
   /** The biased-walk acceptance draw for attempt `a` of edge choice
@@ -166,7 +161,7 @@ object RandomWalks {
              wTri: Int = 2,
              wFar: Int = 1,
              numPartitions: Int = 32,
-             maxRounds: Int = 512): DataFrame = Superstep.withoutAQE(spark) {
+             maxRounds: Int = 512): DataFrame = Superstep.scope(spark) {
     require(walksPerVertex > 0 && walkLength > 0)
     require(wRet >= 1 && wTri >= 1 && wFar >= 1,
       "integer weights must be >= 1 (zero would let rejection loop forever)")
@@ -196,7 +191,7 @@ object RandomWalks {
           col("id").as("cur"), lit(0L).as("t"), lit(0L).as("att")),
       eager = true)
 
-    val gc = new Superstep.CheckpointGC(spark, keep = 4)
+    val gc = new Superstep.CheckpointGC(spark)
     var round = 0
     var pending = state.filter(col("t") < walkLength).count()
     while (pending > 0 && round < maxRounds) {
@@ -233,18 +228,13 @@ object RandomWalks {
         done.unionByName(stepped), eager = false)
       pending = next.filter(col("t") < walkLength).count()
       state = next
-      gc.tick()
+      gc.tick(state)
       round += 1
     }
     require(pending == 0,
       s"biased walks still rejecting after $maxRounds rounds — raise maxRounds")
-    val out = Superstep.freshCheckpoint(
+    Superstep.freshCheckpoint(
       state.select(col("start"), col("replica"), col("path")), eager = true)
-    gc.close(keepLatest = 1)
-    Superstep.freeCheckpoint(ranked)
-    Superstep.freeCheckpoint(degs)
-    Superstep.freeCheckpoint(und)
-    out
   }
 
   /** Skip-gram training pairs from a walk corpus — the (center,

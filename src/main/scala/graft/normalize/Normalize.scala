@@ -25,6 +25,12 @@ import graft.functions.indel_ratio
   */
 object Normalize {
 
+  /** One graph state of the chain. `edges` is a set: no two rows share
+    * (src, dst, relType). [[graft.extract.Extractor.relationships]]
+    * emits it deduplicated, and every stage after it either leaves
+    * edges untouched, only deletes them, or re-applies set semantics
+    * (`remapEdges`) — [[backfillAppliesTo]] relies on it.
+    */
   final case class Snapshot(entities: DataFrame, edges: DataFrame)
 
   // ───────────────────────────── helpers ─────────────────────────────
@@ -386,6 +392,13 @@ object Normalize {
   /** MERGE the 21 well-known (Standard, Industry) APPLIES_TO pairs for
     * standards present in the graph, creating missing Industry nodes
     * (mentioned_in_backfill.py:106-135).
+    *
+    * Precondition: `s.edges` holds no duplicate (src, dst, relType) —
+    * the [[Snapshot]] set contract, which the chain's input (extractor
+    * output through M-1) meets by construction (tested in
+    * PipelineSpec). Only the ≤ 21 new rows get set semantics here; a
+    * duplicate already in `s.edges` would pass through unchanged.
+    * Checking it at run time would cost a full-edge-table job.
     */
   def backfillAppliesTo(s: Snapshot): Snapshot = {
     val spark = s.entities.sparkSession
@@ -421,15 +434,11 @@ object Normalize {
       .select(col("src"), coalesce(col("realDst"), col("dst")).as("dst"),
         lit("APPLIES_TO").as("relType"))
 
-    // r6: MERGE set-semantics without re-shuffling the whole edge
-    // table. The old form union'd ≤21 well-known pairs onto the full
-    // edge set and then dropDuplicates'd EVERYTHING — a full-table
-    // exchange to dedupe a handful of rows. `s.edges` is duplicate-free
-    // here by construction (extractor output and every chain stage emit
-    // distinct edges), so only the new rows need set semantics: dedupe
-    // the tiny new set, drop the ones already present via a
-    // broadcast-build semi join (the big side streams, zero exchange),
-    // and append what is genuinely new.
+    // MERGE set-semantics without re-shuffling the whole edge table:
+    // `s.edges` is already a set (see the precondition above), so only
+    // the new rows need it — dedupe the tiny new set, drop the ones
+    // already present via a broadcast-build semi join (the big side
+    // streams, zero exchange), and append what is genuinely new.
     val newDistinct = newEdges.dropDuplicates("src", "dst", "relType")
     val alreadyThere = s.edges.join(broadcast(newDistinct),
       Seq("src", "dst", "relType"), "left_semi")

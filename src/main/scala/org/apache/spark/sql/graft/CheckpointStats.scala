@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 
 /** Spark 4's `Dataset.localCheckpoint` copies the origin plan's
   * statistics into the `LogicalRDD` it returns
@@ -25,7 +26,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * exchange-free co-partitioned joins rely on. This file sits under
   * `org.apache.spark.sql` only for `Dataset.ofRows` access and the
   * `private[spark]` RDD checkpoint state — the standard extension
-  * point for Spark-native libraries.
+  * point for Spark-native libraries. The same access backs the
+  * reachability walk behind `Superstep`'s checkpoint lifetime rule.
   */
 object CheckpointStats {
 
@@ -53,4 +55,31 @@ object CheckpointStats {
       case l: LogicalRDD => l.rdd.checkpointData.forall(_.isCheckpointed)
       case _ => true
     }
+
+  /** True iff `rdd` is pinned by `localCheckpoint` (computed or not). */
+  def isLocalCheckpoint(rdd: RDD[_]): Boolean =
+    rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
+
+  /** Ids of every RDD that evaluating `roots` can read: the RDD behind
+    * each `LogicalRDD` / `ExternalRDD` leaf of their analyzed plans
+    * (subqueries included) and the dependency closure of those. A
+    * computed checkpoint's dependencies are its own blocks, so the
+    * closure stops there; an uncomputed lazy one still reaches every
+    * input it will read. Driver-side only: no Spark job runs.
+    */
+  def reachableRdds(roots: Seq[DataFrame]): Set[Int] = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    var todo: List[RDD[_]] = roots.toList.flatMap { df =>
+      df.asInstanceOf[Dataset[_]].queryExecution.analyzed.collectWithSubqueries {
+        case l: LogicalRDD => l.rdd: RDD[_]
+        case e: ExternalRDD[_] => e.rdd: RDD[_]
+      }
+    }
+    while (todo.nonEmpty) {
+      val r = todo.head
+      todo = todo.tail
+      if (seen.add(r.id)) todo = r.dependencies.map(_.rdd).toList ++ todo
+    }
+    seen.toSet
+  }
 }

@@ -44,6 +44,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(rels.filter(!col("relType").isin(model.SemanticRelTypes: _*)).count() == 0)
   }
 
+  test("backfill precondition: extracted edges through M-1 are a set") {
+    val s = Normalize.m1NormalizeNames(
+      Snapshot(Extractor.entities(corpus), Extractor.relationships(corpus)))
+    assert(s.edges.count() > 100)
+    assert(s.edges.groupBy("src", "dst", "relType").count()
+      .filter(col("count") > 1).count() == 0)
+  }
+
   test("validation gate: no duplicate (label,name) entities") {
     assert(snapshot.entities.groupBy("label", "name").count()
       .filter(col("count") > 1).count() == 0)

@@ -3,15 +3,19 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algo.{ConnectedComponents, LabelPropagation, Superstep}
+import graft.algo.{BowTie, ConnectedComponents, LabelPropagation, Superstep}
 import graft.graph.GraphOps
 
-/** The superstep skeleton's stopping and resume contract, through the
-  * algorithms that run on it: CC raises on a cap stop, and CC and LPA
-  * resume from a durable checkpoint to exactly the uninterrupted
-  * answer (the PageRank twin lives in ChunkValidateSpec).
+/** The superstep skeleton's stopping, resume and storage contract,
+  * through the algorithms that run on it: CC raises on a cap stop, CC
+  * and LPA resume from a durable checkpoint to exactly the
+  * uninterrupted answer (the PageRank twin lives in ChunkValidateSpec),
+  * `save` commits atomically, and the checkpoint sweeps never free a
+  * frame a named root still reads.
   */
 class SuperstepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -65,5 +69,66 @@ class SuperstepSpec extends AnyFunSuite {
     val fresh = LabelPropagation.run(spark, sym, numPartitions = 4)
     assert(r2.iterations == fresh.iterations)
     assert(pairs(r2.labels, "community") == pairs(fresh.labels, "community"))
+  }
+
+  test("save commits _LATEST and leaves no temp file behind") {
+    val dir = Files.createTempDirectory("graft_latest").toString
+    val ss = new Superstep(spark, dir, every = 1)
+    ss.save(1, spark.range(5).toDF("id"))
+    ss.save(2, spark.range(6).toDF("id"))
+    assert(latest(dir) == "2" && ss.latest().contains(2))
+    val names = Files.list(Paths.get(dir)).toArray.map(_.toString.split('/').last).toSet
+    assert(names == Set("_LATEST", "metrics", "superstep=1", "superstep=2"))
+  }
+
+  private def pinned(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case l: LogicalRDD => spark.sparkContext.getPersistentRDDs.contains(l.rdd.id)
+    case _ => false
+  }
+
+  test("CheckpointGC.tick keeps exactly the loop frames its roots reach") {
+    val gc = new Superstep.CheckpointGC(spark)
+    val state = Superstep.freshCheckpoint(spark.range(10).toDF("id"), eager = true)
+    val frontier = Superstep.freshCheckpoint(state.filter(col("id") > 5), eager = true)
+    val stale = Superstep.freshCheckpoint(state.filter(col("id") < 5), eager = true)
+    gc.tick(state, frontier)
+    assert(pinned(state) && pinned(frontier) && !pinned(stale))
+    assert(frontier.count() == 4)
+    gc.tick(state)
+    assert(pinned(state) && !pinned(frontier))
+  }
+
+  test("scope keeps a returned lazy checkpoint chain; once computed, only its head") {
+    def chain(): DataFrame = {
+      val a = spark.range(20).toDF("id").localCheckpoint(false)
+      val b = a.select((col("id") * 2).as("id")).localCheckpoint(false)
+      b.select((col("id") + 1).as("id")).localCheckpoint(false)
+    }
+    val expect = (0L until 20L).map(2 * _ + 1)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val lazyOut = Superstep.scope(spark)(chain())
+    // nothing computed yet: the head still reads both inputs
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 3)
+    assert(lazyOut.collect().map(_.getLong(0)).sorted.toSeq == expect)
+
+    val before2 = spark.sparkContext.getPersistentRDDs.keySet
+    val computed = Superstep.scope(spark) { val c = chain(); c.count(); c }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before2).size == 1)
+    assert(pinned(computed))
+    assert(computed.collect().map(_.getLong(0)).sorted.toSeq == expect)
+  }
+
+  test("hand-rolled loop: tick(state, frontier) keeps the frontier readable") {
+    // a 12-hop directed path: reachableFrom runs 12 frontier rounds, each
+    // reading the previous round's frontier after the sweep
+    val path = Superstep.freshCheckpoint(
+      (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+        .repartition(4, col("src")), eager = true)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val reached = BowTie.reachableFrom(spark, path, Seq(3L).toDF("id"), 4)
+    assert(reached.collect().map(_.getLong(0)).sorted.toSeq == (3L to 12L))
+    // only the returned state survives the run
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1)
+    assert(pinned(reached) && pinned(path))
   }
 }
