@@ -108,6 +108,17 @@ object PlanDump {
           .queryExecution.executedPlan.toString
       }
     }
+    // ── connected components: one star round as the loop composes it ──
+    Superstep.withoutAQE(spark) {
+      // the loop's state: a checkpoint partitioned by the last distinct
+      val e = Superstep.freshCheckpoint(
+        (0L until 80L).map(i => (i, (i * 3 + 1) % 80)).toDF("src", "dst")
+          .repartition(4, col("src"), col("dst")), eager = true)
+      dump("ConnectedComponents round (smallStar(largeStar(e)))") {
+        val cc = graft.algo.ConnectedComponents
+        cc.smallStar(cc.largeStar(e)).queryExecution.executedPlan.toString
+      }
+    }
     // ── round-5: ANN family (PLANS.md §13) ──
     dump("KnnGraph round (candidate self-join + bounded top-k merge)") {
       val nb0 = graft.sim.KnnGraph.run(spark, vecs, k = 3, rounds = 0).neighbors

@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Connected components via alternating large-star / small-star
@@ -10,46 +11,47 @@ import org.apache.spark.sql.functions._
   * min-label flooding which needs O(diameter) rounds on path-like
   * graphs — the right choice for 10^12-file scale.
   *
-  * Pure DataFrame joins/aggs; no collect_list (per-vertex neighbor
-  * minima come from groupBy(min) + an equi-join, so high-degree
-  * vertices never materialize their adjacency in one buffer).
+  * Each star reads its input through one hash exchange on `src`: the
+  * per-vertex neighbor minimum is `min(dst) OVER (PARTITION BY src)`
+  * evaluated in place on the rows it labels, not a groupBy(min) joined
+  * back onto the same rows, so a round plans three shuffles (src, src,
+  * and the final (src, dst) distinct). No collect_list: a vertex's rows
+  * sit in Spark's window buffer, which spills to disk past its
+  * in-memory threshold, so a high-degree hub costs disk, not heap.
   * Component label = min vertex id of the component ("exact up to
   * relabeling" canonical form per the north rule).
   */
 object ConnectedComponents {
 
+  private val bySrc = Window.partitionBy(col("src"))
+
   /** One large-star round: every neighbor v > u links to
     * m = min(Γ(u) ∪ {u}). Exposed, like [[smallStar]], for PlanSpec.
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    val mins = sym.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src"), least(col("src"), col("mn")).as("m"))
-    sym.filter(col("dst") > col("src"))
-      .join(mins.hint("shuffle_hash"), Seq("src")) // skip per-round SMJ sorts
+  private[graft] def largeStar(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .withColumn("m", least(col("src"), min(col("dst")).over(bySrc)))
+      .filter(col("dst") > col("src")) // after the window: m sees all of Γ(u)
       .select(col("dst").as("src"), col("m").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    // no distinct here: small-star's final distinct restores set
-    // semantics, saving one full shuffle per round
-  }
+    // dst > src ≥ m, so no self-loop; no distinct here: small-star's
+    // final distinct restores set semantics, saving one shuffle per round
 
   /** One small-star round: orient u > v; u and every smaller neighbor
-    * link to m = min(Γ⁻(u) ∪ {u}).
+    * link to m = min(Γ⁻(u) ∪ {u}). Each oriented row yields both of its
+    * links, (v, m) and (u, m), in one pass; the distinct folds the
+    * repeated (u, m) and drops the rest of the duplicates.
     */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
-    val or = e.select(
-      greatest(col("src"), col("dst")).as("src"),
-      least(col("src"), col("dst")).as("dst"))
-    val mins = or.groupBy(col("src")).agg(min(col("dst")).as("m"))
-    val moved = or.join(mins.hint("shuffle_hash"), Seq("src"))
-      .filter(col("dst") =!= col("m"))
-      .select(col("dst").as("src"), col("m").as("dst"))
-    val self = mins.select(col("src"), col("m").as("dst"))
-    moved.union(self)
+  private[graft] def smallStar(e: DataFrame): DataFrame =
+    e.select(
+        greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
+      .withColumn("m", min(col("dst")).over(bySrc))
+      .select(explode(array(
+        struct(col("dst").as("src"), col("m").as("dst")),
+        struct(col("src"), col("m").as("dst")))).as("l"))
+      .select(col("l.src"), col("l.dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-  }
 
   private def checksum(e: DataFrame): (Long, Long) = {
     val r = e.agg(count(lit(1)),
@@ -75,10 +77,9 @@ object ConnectedComponents {
       // no upfront distinct/repartition: the first large-star round
       // shuffles by src anyway and small-star's distinct restores set
       // semantics — two edge-scale shuffles saved
-      // freshCheckpoint, not bare localCheckpoint: each star round
-      // self-joins its input, so inherited origin stats would square
-      // per round (see CheckpointStats) — the exact planning blowup
-      // diagnosed for the refine loop applies here from round ~25 on
+      // freshCheckpoint, not bare localCheckpoint: large-star reads its
+      // input twice (the union), so inherited origin stats would keep
+      // growing round over round (see CheckpointStats)
       Superstep.freshCheckpoint(
         edges.select(col("src"), col("dst"))
           .filter(col("src") =!= col("dst")), eager = true),

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats
 
 /** The superstep skeleton ([[Superstep.iterate]]) and per-superstep
   * durable checkpointing with per-partition lineage and convergence
@@ -49,15 +50,14 @@ object Superstep {
 
   /** localCheckpoint + reset of the inherited stats lineage — use for
     * every per-iteration checkpoint whose next round joins it more than
-    * once (see [[org.apache.spark.sql.graft.CheckpointStats]]: Spark 4
-    * propagates origin stats through checkpoints, and multi-use joins
-    * grow the inherited sizeInBytes BigInt exponentially with rounds
-    * until PLANNING dominates wall time).
+    * once (see [[CheckpointStats]]: Spark 4 propagates origin stats
+    * through checkpoints, and multi-use joins grow the inherited
+    * sizeInBytes BigInt exponentially with rounds until PLANNING
+    * dominates wall time).
     */
   def freshCheckpoint(df: org.apache.spark.sql.DataFrame,
                       eager: Boolean): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.graft.CheckpointStats
-      .dropOriginStats(df.localCheckpoint(eager))
+    CheckpointStats.dropOriginStats(df.localCheckpoint(eager))
 
   /** Release the block-manager blocks pinned by a localCheckpoint'd
     * frame. `Dataset.unpersist` only consults the CacheManager and is
@@ -69,7 +69,7 @@ object Superstep {
     */
   def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
+      case l: org.apache.spark.sql.execution.LogicalRDD => CheckpointStats.release(l.rdd)
       case _ => ()
     }
 
@@ -81,7 +81,7 @@ object Superstep {
     */
   def releaseIds(spark: SparkSession, ids: Set[Int]): Unit = {
     val now = spark.sparkContext.getPersistentRDDs
-    ids.foreach(id => now.get(id).foreach(_.unpersist(false)))
+    ids.foreach(id => now.get(id).foreach(CheckpointStats.release))
   }
 
   /** The frames a scope's value hands back: the value itself, or the
@@ -111,11 +111,10 @@ object Superstep {
       * touched.
       */
     def tick(roots: DataFrame*): Unit = {
-      val live = org.apache.spark.sql.graft.CheckpointStats.reachableRdds(roots)
+      val live = CheckpointStats.reachableRdds(roots)
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preexisting(id) && !live(id) &&
-            org.apache.spark.sql.graft.CheckpointStats.isLocalCheckpoint(rdd))
-          rdd.unpersist(blocking = false)
+        if (!preexisting(id) && !live(id) && CheckpointStats.isLocalCheckpoint(rdd))
+          CheckpointStats.release(rdd)
       }
     }
 
@@ -127,7 +126,7 @@ object Superstep {
     def close(keepLatest: Int = 1): Unit = {
       val now = spark.sparkContext.getPersistentRDDs
       val created = (now.keySet -- preexisting).toList.sorted
-      created.dropRight(keepLatest).foreach(id => now.get(id).foreach(_.unpersist(false)))
+      created.dropRight(keepLatest).foreach(id => now.get(id).foreach(CheckpointStats.release))
     }
   }
 
@@ -187,7 +186,7 @@ object Superstep {
           state = c.save(steps, state, s.metrics)
       }
     }
-    if (!org.apache.spark.sql.graft.CheckpointStats.materialized(state))
+    if (!CheckpointStats.materialized(state))
       state.count()
     gc.tick(state)
     (state, steps, converged)
@@ -259,18 +258,23 @@ final class Superstep(spark: SparkSession, dir: String, val every: Int = 5) {
            driverMetrics: Map[String, Double] = Map.empty): DataFrame = {
     val path = base.resolve(s"superstep=$step").toString
     state.write.mode("overwrite").parquet(path)
-    val reread = spark.read.parquet(path)
+    // the state's own schema: inferring it from the footers costs a job
+    val reread = spark.read.schema(state.schema).parquet(path)
 
-    // per-partition lineage: row count + order-independent content hash
-    val cols = reread.columns.map(col)
-    val partStats = reread
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__h", xxhash64(cols: _*))
-      .groupBy(col("__pid"))
-      .agg(count(lit(1)).as("rowCount"),
-        expr("bit_xor(__h)").as("lineageHash"))
+    // per-partition lineage: row count + order-independent content hash,
+    // in one narrow pass over the re-read scan; empty partitions omitted
+    val partStats = reread.select(xxhash64(reread.columns.map(col): _*))
+      .queryExecution.toRdd
+      .mapPartitionsWithIndex { (pid, rows) =>
+        var n = 0L
+        var h = 0L
+        rows.foreach { r => n += 1; h ^= r.getLong(0) }
+        if (n == 0) Iterator.empty else Iterator((pid, n, h))
+      }
       .collect()
-      .map(r => s"""{"partitionId":${r.getInt(0)},"rowCount":${r.getLong(1)},"lineageHash":${r.getLong(2)}}""")
+      .sortBy(_._1)
+      .map { case (pid, n, h) =>
+        s"""{"partitionId":$pid,"rowCount":$n,"lineageHash":$h}""" }
       .mkString("[", ",", "]")
 
     val dm = driverMetrics

@@ -99,6 +99,16 @@ object BpeTrain {
     * loop (BpeTrainSpec pins sequential parity; tie-breaks compare
     * UTF-8 bytes exactly like Spark's string ordering). Above the
     * guard the distributed per-merge loop still runs as the fallback.
+    *
+    * Why 10M: both paths give the same merges, so the guard only has to
+    * keep the local trainer inside the driver heap. Each distinct word
+    * costs it roughly half a kilobyte there (an estimate for ~8-letter
+    * words: the collected (word, count) pair, a symbol array holding
+    * one substring per code point, and one posting-list int per pair
+    * occurrence), so 10⁷ words need about 5 GB — within the engine's
+    * default 8 GB driver heap (`SPARK_DRIVER_MEM`, build.sbt). A guard
+    * of 5·10⁷ would need about 25 GB: such a vocabulary would fail on
+    * that heap instead of falling back to the distributed loop.
     */
   def train(docs: DataFrame, numMerges: Int, textCol: String = "text",
             minPairCount: Long = 2L, checkpointEvery: Int = 8,

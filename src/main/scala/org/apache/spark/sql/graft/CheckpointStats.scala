@@ -27,7 +27,8 @@ import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
   * `org.apache.spark.sql` only for `Dataset.ofRows` access and the
   * `private[spark]` RDD checkpoint state — the standard extension
   * point for Spark-native libraries. The same access backs the
-  * reachability walk behind `Superstep`'s checkpoint lifetime rule.
+  * reachability walk behind `Superstep`'s checkpoint lifetime rule and
+  * the quiet release of the checkpoints it frees.
   */
 object CheckpointStats {
 
@@ -59,6 +60,16 @@ object CheckpointStats {
   /** True iff `rdd` is pinned by `localCheckpoint` (computed or not). */
   def isLocalCheckpoint(rdd: RDD[_]): Boolean =
     rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
+
+  /** Unpersist `rdd` without blocking. A local checkpoint goes through
+    * `SparkContext.unpersistRDD` (`private[spark]`): `RDD.unpersist`
+    * logs a WARN for every locally checkpointed RDD it frees, which
+    * buried every other log line of a long run. Anything else, a
+    * `Dataset.persist` cache included, takes `RDD.unpersist` as before.
+    */
+  def release(rdd: RDD[_]): Unit =
+    if (isLocalCheckpoint(rdd)) rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 
   /** Ids of every RDD that evaluating `roots` can read: the RDD behind
     * each `LogicalRDD` / `ExternalRDD` leaf of their analyzed plans

@@ -263,31 +263,27 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("CC star rounds: no SMJ; each round's exchanges pinned") {
+  test("CC round: large-star then small-star plans three exchanges, no SMJ") {
     Superstep.withoutAQE(spark) {
-      // state partitioned as the loop's checkpoints are: by the
-      // previous small-star's (src, dst) distinct
-      val e = (0L until 80L).map(i => (i, (i * 3 + 1) % 80)).toDF("src", "dst")
-        .repartition(8, col("src"), col("dst"))
-      // the keys of every shuffle the planner inserts (a reused
-      // exchange is a leaf here, so it is not counted twice)
-      def shape(df: DataFrame): (String, Seq[String]) = {
-        val plan = df.queryExecution.executedPlan
-        val keys = plan.collect {
-          case x: ShuffleExchangeExec if x.shuffleOrigin == ENSURE_REQUIREMENTS =>
-            x.outputPartitioning.asInstanceOf[HashPartitioning].expressions
-              .flatMap(_.references.map(_.name)).mkString(", ")
-        }
-        (plan.toString, keys.sorted)
+      // the loop's state: a checkpoint partitioned by the previous
+      // small-star's (src, dst) distinct
+      val e = Superstep.freshCheckpoint(
+        (0L until 80L).map(i => (i, (i * 3 + 1) % 80)).toDF("src", "dst")
+          .repartition(8, col("src"), col("dst")), eager = true)
+      val cc = graft.algo.ConnectedComponents
+      val plan = cc.smallStar(cc.largeStar(e)).queryExecution.executedPlan
+      val phys = plan.toString
+      assert(!phys.contains("SortMergeJoin"), s"no sort-merge in a star round:\n$phys")
+      // the keys of every shuffle the planner inserts: each star reads
+      // its input once, through one src exchange, and the round ends in
+      // small-star's distinct
+      val keys = plan.collect {
+        case x: ShuffleExchangeExec if x.shuffleOrigin == ENSURE_REQUIREMENTS =>
+          x.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+            .flatMap(_.references.map(_.name)).mkString(", ")
       }
-      val (large, largeKeys) = shape(graft.algo.ConnectedComponents.largeStar(e))
-      val (small, smallKeys) = shape(graft.algo.ConnectedComponents.smallStar(e))
-      for (phys <- Seq(large, small))
-        assert(!phys.contains("SortMergeJoin"), s"no sort-merge in a star round:\n$phys")
-      assert(largeKeys === Seq("src", "src"),
-        s"large-star: the min-neighbor agg and the join probe side:\n$large")
-      assert(smallKeys === Seq("src", "src", "src, dst"),
-        s"small-star: the min agg, the join probe side, the distinct:\n$small")
+      assert(keys.sorted === Seq("src", "src", "src, dst"),
+        s"a round: large-star's src, small-star's src, the distinct's (src, dst):\n$phys")
     }
   }
 

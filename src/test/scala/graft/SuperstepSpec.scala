@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, expr, lit, spark_partition_id, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.algo.{BowTie, ConnectedComponents, LabelPropagation, Superstep}
@@ -79,6 +79,27 @@ class SuperstepSpec extends AnyFunSuite {
     assert(latest(dir) == "2" && ss.latest().contains(2))
     val names = Files.list(Paths.get(dir)).toArray.map(_.toString.split('/').last).toSet
     assert(names == Set("_LATEST", "metrics", "superstep=1", "superstep=2"))
+  }
+
+  test("save's per-partition lineage equals the groupBy(partition id) formula") {
+    val dir = Files.createTempDirectory("graft_lineage").toString
+    val state = spark.range(0, 2000, 1, 5)
+      .select(col("id"), (col("id") % 7).as("k"), col("id").cast("string").as("s"))
+    new Superstep(spark, dir, every = 1).save(3, state)
+    val json = new String(Files.readAllBytes(Paths.get(dir, "metrics", "superstep=3.json")))
+    val entry = """\{"partitionId":(\d+),"rowCount":(\d+),"lineageHash":(-?\d+)\}""".r
+    val got = entry.findAllMatchIn(json)
+      .map(m => (m.group(1).toInt, m.group(2).toLong, m.group(3).toLong)).toSeq
+    // the formula as a shuffle over the re-read state, computed here
+    val reread = spark.read.parquet(Paths.get(dir, "superstep=3").toString)
+    val expect = reread
+      .withColumn("pid", spark_partition_id())
+      .withColumn("h", xxhash64(reread.columns.map(col): _*))
+      .groupBy(col("pid"))
+      .agg(count(lit(1)), expr("bit_xor(h)"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(got.size > 1 && got == expect)
+    assert(got.map(_._2).sum == state.count())
   }
 
   private def pinned(df: DataFrame): Boolean = df.queryExecution.analyzed match {
