@@ -33,9 +33,11 @@ object Betweenness {
   private final case class Forward(edges: DataFrame, state: DataFrame,
                                    maxDist: Int)
 
-  /** Forward Brandes pass: BFS levels with exact BIGINT σ path counts
-    * from every source. Leaves `edges` and the final σ `state`
-    * checkpointed; callers free both when done.
+  /** Forward Brandes pass on [[Superstep.frontier]]: BFS levels with
+    * exact BIGINT σ path counts from every source. Returns the
+    * checkpointed `edges`, the final σ `state` and the deepest level;
+    * the caller's [[Superstep.scope]] frees both once its result no
+    * longer reads them.
     */
   private def forward(spark: SparkSession,
                       symEdges: DataFrame,
@@ -53,35 +55,22 @@ object Betweenness {
     val init = sources.distinct.toDF("landmark")
       .select(col("landmark").as("id"), col("landmark"),
         lit(0).as("dist"), lit(1L).as("sigma"))
-    var state = Superstep.freshCheckpoint(init, eager = true)
-    var frontier = state
-    var frontierN = frontier.count()
     var depth = 0
-    val gc = new Superstep.CheckpointGC(spark)
-    while (frontierN > 0 && depth < maxIter) {
+    val (state, _) = Superstep.frontier(spark, init, maxIter,
+      "betweenness forward-pass") { (frontier, state) =>
       depth += 1
       // σ(v) = Σ σ(u) over BFS-DAG preds u — all of them live in the
       // PREVIOUS frontier (every DAG edge spans consecutive levels),
       // so the partial sum is complete in one exchange
-      val cand = frontier
+      frontier
         .join(edges.hint("shuffle_hash"), frontier("id") === edges("src"))
         .groupBy(edges("dst").as("id"), col("landmark"))
         .agg(sum(col("sigma")).as("sigma"))
         .withColumn("dist", lit(depth))
-      val next = Superstep.freshCheckpoint(
-        cand.join(state.select(col("id"), col("landmark")),
+        .join(state.select(col("id"), col("landmark")),
           Seq("id", "landmark"), "left_anti")
-          .select(col("id"), col("landmark"), col("dist"), col("sigma")),
-        eager = false)
-      frontierN = next.count()
-      if (frontierN > 0) {
-        state = Superstep.freshCheckpoint(state.unionByName(next), eager = true)
-      }
-      frontier = next
-      gc.tick(state, frontier)
+        .select(col("id"), col("landmark"), col("dist"), col("sigma"))
     }
-    require(frontierN == 0,
-      s"betweenness forward pass still live after $maxIter rounds")
     Forward(edges, state, depth - 1)
   }
 

@@ -45,8 +45,9 @@ object BowTie {
 
   /** One reachability superstep: the frontier's unseen out-neighbors.
     * With `edges` partitioned on src and frontier/state on id, the
-    * only exchange is the map-side-partial distinct — the join and the
-    * anti-join are co-partitioned (PlanSpec gates this).
+    * only exchange is the distinct, which is map-side partial, so a hub
+    * frontier ships at most one row per (partition, vertex) — the join
+    * and the anti-join are co-partitioned (PlanSpec gates this).
     */
   private[graft] def expand(edges: DataFrame,
                             frontier: DataFrame,
@@ -57,10 +58,13 @@ object BowTie {
       .join(state, Seq("id"), "left_anti")
 
   /** All vertices reachable from `seeds` along src→dst edges, seeds
-    * included. `edges` must already be deduplicated, self-loop-free
-    * and hash-partitioned on `src` (the callers checkpoint one such
-    * table per direction and share it across sweeps). An empty seed
-    * set returns an empty frame without touching the edge table.
+    * included: [[expand]] run on [[Superstep.frontier]], which owns
+    * the state and frontier checkpoints, the per-round count and the
+    * `maxIter` stop. `edges` must already be deduplicated,
+    * self-loop-free and hash-partitioned on `src` (the callers
+    * checkpoint one such table per direction and share it across
+    * sweeps). An empty seed set returns an empty frame without
+    * touching the edge table.
     */
   private[graft] def reachableFrom(spark: SparkSession,
                                    edges: DataFrame,
@@ -68,31 +72,9 @@ object BowTie {
                                    numPartitions: Int = 32,
                                    maxIter: Int = 1024): DataFrame =
     Superstep.scope(spark) {
-      var state = Superstep.freshCheckpoint(
-        seeds.select(col("id")).distinct()
-          .repartition(numPartitions, col("id")), eager = true)
-      var frontier = state
-      var frontierSize = frontier.count()
-      var iter = 0
-      val gc = new Superstep.CheckpointGC(spark)
-
-      while (frontierSize > 0 && iter < maxIter) {
-        // the distinct is map-side partial, so a hub frontier ships at
-        // most one row per (partition, vertex) into the exchange
-        val next = Superstep.freshCheckpoint(
-          expand(edges, frontier, state), eager = false)
-        frontierSize = next.count() // materializes the lazy checkpoint
-        if (frontierSize > 0) {
-          state = Superstep.freshCheckpoint(
-            state.unionByName(next), eager = true)
-        }
-        frontier = next
-        gc.tick(state, frontier)
-        iter += 1
-      }
-      require(frontierSize == 0,
-        s"reachability frontier still live after $maxIter rounds — raise maxIter")
-      state
+      Superstep.frontier(spark,
+        seeds.select(col("id")).distinct().repartition(numPartitions, col("id")),
+        maxIter, "reachability")(expand(edges, _, _))._1
     }
 
   /** @param edges directed (src, dst); duplicates and self-loops

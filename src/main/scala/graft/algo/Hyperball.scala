@@ -102,21 +102,20 @@ object Hyperball {
 
     val verts = edges.select(col("src").as("id"))
       .unionAll(edges.select(col("dst").as("id"))).distinct()
-    var state = Superstep.freshCheckpoint(
+    val init = Superstep.freshCheckpoint(
       verts.repartition(numPartitions, col("id"))
         .select(col("id"), array(mix64(col("id"))).as("sk"),
           lit(1.0).as("nf"), lit(0.0).as("sum_dist"), lit(0.0).as("harmonic"),
           lit(0L).as("ecc")),
       eager = true)
 
-    val gc = new Superstep.CheckpointGC(spark)
     // nf(0) = |V|: the eager init checkpoint makes this count cheap,
-    // and each round extends the series by its Δ-sum — the convergence
-    // action doubles as the distance-distribution collector
-    val nfSeries = scala.collection.mutable.ArrayBuffer(state.count().toDouble)
-    var t = 1
-    var growing = true
-    while (growing && t <= maxIter) {
+    // and each growing round appends its Δ-sum — the convergence
+    // action doubles as the distance-distribution collector, so round
+    // t runs while the series holds nf(0) … nf(t−1)
+    val nfSeries = scala.collection.mutable.ArrayBuffer(init.count().toDouble)
+    val (state, _, converged) = Superstep.iterate(spark, init, maxIter) { state =>
+      val t = nfSeries.size.toDouble
       // pull every neighbor's sketch; the map-side partial KmvMerge
       // bounds the grouping exchange to ≤ k longs per (partition, id)
       val msgs = edges
@@ -133,22 +132,21 @@ object Hyperball {
         // monotone: merging only shrinks the kth minimum, so Δ ≥ 0
         .withColumn("delta", col("nf") - col("nf0"))
         .select(col("id"), col("sk"), col("nf"),
-          (col("sd0") + col("delta") * lit(t.toDouble)).as("sum_dist"),
-          (col("h0") + col("delta") / lit(t.toDouble)).as("harmonic"),
+          (col("sd0") + col("delta") * lit(t)).as("sum_dist"),
+          (col("h0") + col("delta") / lit(t)).as("harmonic"),
           when(col("delta") > 0, lit(t.toLong)).otherwise(col("e0")).as("ecc"),
           col("delta"))
       val chk = Superstep.freshCheckpoint(next, eager = false)
       // the single per-round action: materializes the checkpoint and
       // decides convergence (sketches stop changing → Δ exactly 0)
       val dSum = chk.agg(sum(col("delta")).as("d")).collect()(0).getDouble(0)
-      growing = dSum > 0.0
+      val growing = dSum > 0.0
       if (growing) nfSeries += nfSeries.last + dSum
-      state = chk
-      gc.tick(state)
-      t += 1
+      Superstep.Step(chk, converged = !growing)
     }
-    require(!growing,
-      s"HyperBall still expanding after $maxIter rounds — raise maxIter")
+    if (!converged)
+      throw new IllegalStateException(
+        s"HyperBall still expanding after $maxIter rounds — raise maxIter")
     Result(state.select(col("id"), col("nf"), col("sum_dist"), col("harmonic"),
         col("ecc")),
       nfSeries.toSeq)

@@ -33,9 +33,12 @@ import org.apache.spark.sql.functions._
   * case (a chain of 2-cycles) degrades to O(V) rounds like every
   * label-propagation SCC; pivot-BFS hybrids fix that, out of scope.
   *
-  * Every frame is an eager checkpoint; after each inner round one
-  * [[Superstep.CheckpointGC]] sweep keeps only the graph state (edges,
-  * vertices, settled) and the frames the running phase still reads.
+  * Trim and coloring checkpoint every frame eagerly; after each of
+  * their rounds one [[Superstep.CheckpointGC]] sweep keeps only the
+  * graph state (edges, vertices, settled) and the frames the running
+  * phase still reads. The backward reach is [[BowTie.expand]] on
+  * [[Superstep.frontier]], which owns its own frames. All three phases
+  * draw on one budget of `maxIter` fixpoint rounds in total.
   */
 object Scc {
 
@@ -63,7 +66,9 @@ object Scc {
     var budget = maxIter
     def spend(): Unit = {
       budget -= 1
-      require(budget > 0, s"SCC exceeded $maxIter total fixpoint rounds")
+      if (budget <= 0)
+        throw new IllegalStateException(
+          s"SCC exceeded $maxIter total fixpoint rounds — raise maxIter")
     }
 
     // settle `group` (id, scc): fold into the accumulator, peel the graph
@@ -116,29 +121,20 @@ object Scc {
           sweep(color)
         }
 
-        // -- 3. backward settled-bit within the color class -------------
-        val sameColorEdges = chk(
+        // -- 3. backward reach from the roots within the color class ----
+        // BowTie's reachability round over the reversed same-color
+        // edges; its rounds draw on the shared budget
+        val sameColorRev = chk(
           e.join(color.select(col("id").as("src"), col("c").as("csrc")), Seq("src"))
             .join(color.select(col("id").as("dst"), col("c").as("cdst")), Seq("dst"))
             .filter(col("csrc") === col("cdst"))
-            .select(col("src"), col("dst"))
-            .repartition(numPartitions, col("dst")))
-        var reach = chk(color.filter(col("id") === col("c")).select(col("id")))
-        var frontier = reach
-        var frontierN = frontier.count()
-        while (frontierN > 0) {
-          spend()
-          val fresh = chk(
-            sameColorEdges
-              .join(frontier.hint("shuffle_hash"),
-                sameColorEdges("dst") === frontier("id"))
-              .select(sameColorEdges("src").as("id")).distinct()
-              .join(reach, Seq("id"), "left_anti"))
-          frontierN = fresh.count()
-          if (frontierN > 0) reach = chk(reach.unionByName(fresh))
-          frontier = fresh
-          sweep(color, sameColorEdges, reach, frontier)
-        }
+            .select(col("dst").as("src"), col("src").as("dst"))
+            .repartition(numPartitions, col("src")))
+        val roots = color.filter(col("id") === col("c")).select(col("id"))
+          .repartition(numPartitions, col("id"))
+        val (reach, rounds) = Superstep.frontier(spark, roots, budget - 1,
+          "SCC backward reach")(BowTie.expand(sameColorRev, _, _))
+        budget -= rounds
 
         // -- 4. settle SCC members, peel --------------------------------
         val members = chk(

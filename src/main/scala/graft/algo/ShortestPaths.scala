@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,14 +24,18 @@ import org.apache.spark.sql.functions._
   * over the whole run every (edge, landmark) pair crosses the wire
   * exactly once — total traffic |E|·|L|, same as |L| PageRank
   * iterations, regardless of diameter. Rounds = eccentricity of the
-  * landmark set (small on web-ish graphs). State and frontier are
-  * `freshCheckpoint`ed per round with [[Superstep.CheckpointGC]]
-  * reclaiming superseded blocks, as in
-  * [[ConnectedComponents]]. Re-checkpointing the append-only state
-  * each round costs one extra state-sized write per round (diameter×
-  * amplification on the skinny 3-long rows) and buys a self-contained
-  * GC-able result; at cluster scale route it through a [[Superstep]]
-  * dir, where those writes are the durable resume points anyway.
+  * landmark set (small on web-ish graphs).
+  *
+  * The BFS, Bellman–Ford and temporal earliest-arrival /
+  * latest-departure loops run on [[Superstep.frontier]]: each supplies
+  * its round (`expand`) and, for relaxation, its min/max merge; the
+  * skeleton owns the state and frontier checkpoints, the per-round
+  * count, freeing superseded rounds and the `maxIter` stop.
+  * Re-checkpointing the append-only state each round costs one extra
+  * state-sized write per round (diameter× amplification on the skinny
+  * 3-long rows) and buys a self-contained result. [[fastestDuration]]
+  * keeps its own loop: its Pareto-merged state is rebuilt before the
+  * round's frontier is known.
   *
   * Unreachable (id, landmark) pairs are absent from the output (no
   * +inf sentinel), matching the SQL twin's semantics.
@@ -59,37 +63,57 @@ object ShortestPaths {
 
     val init = landmarks.distinct.toDF("landmark")
       .select(col("landmark").as("id"), col("landmark"), lit(0L).as("dist"))
-    var state = Superstep.freshCheckpoint(init, eager = true)
-    var frontier = state
-    var frontierSize = frontier.count()
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
+    Superstep.frontier(spark, init, maxIter, "BFS")(hopStep(edges))._1
+  }
 
-    while (frontierSize > 0 && iter < maxIter) {
-      // dist+1 to every neighbor of the frontier; min-reduce is
-      // map-side combinable so the exchange carries ≤ one row per
-      // (vertex, landmark) even off high-degree frontiers
-      val candidates = frontier
+  /** One BFS round: dist+1 to every neighbor of the frontier, minus
+    * the (id, landmark) pairs already settled. The min-reduce is
+    * map-side combinable, so the exchange carries ≤ one row per
+    * (vertex, landmark) even off high-degree frontiers.
+    */
+  private[graft] def hopStep(edges: DataFrame)(frontier: DataFrame,
+                                               state: DataFrame): DataFrame =
+    frontier
+      .join(edges.hint("shuffle_hash"), frontier("id") === edges("src"))
+      .select(edges("dst").as("id"), col("landmark"),
+        (col("dist") + lit(1L)).as("dist"))
+      .groupBy(col("id"), col("landmark"))
+      .agg(min(col("dist")).as("dist"))
+      .join(state.select(col("id"), col("landmark")),
+        Seq("id", "landmark"), "left_anti")
+
+  /** One Bellman–Ford round: the frontier's relaxed (id, landmark)
+    * costs that strictly beat the state's.
+    */
+  private[graft] def weightedStep(edges: DataFrame)(frontier: DataFrame,
+                                                    state: DataFrame): DataFrame =
+    improvements(
+      frontier
         .join(edges.hint("shuffle_hash"), frontier("id") === edges("src"))
         .select(edges("dst").as("id"), col("landmark"),
-          (col("dist") + lit(1L)).as("dist"))
+          (col("dist") + col("weight")).as("dist"))
         .groupBy(col("id"), col("landmark"))
-        .agg(min(col("dist")).as("dist"))
-      val next = Superstep.freshCheckpoint(
-        candidates.join(state.select(col("id"), col("landmark")),
-          Seq("id", "landmark"), "left_anti"), eager = false)
-      frontierSize = next.count() // materializes the lazy checkpoint
-      if (frontierSize > 0) {
-        state = Superstep.freshCheckpoint(state.unionByName(next), eager = true)
-      }
-      frontier = next
-      gc.tick(state, frontier)
-      iter += 1
-    }
-    require(frontierSize == 0,
-      s"BFS frontier still live after $maxIter rounds — raise maxIter")
-    state
-  }
+        .agg(min(col("dist")).as("dist")),
+      state, Seq("id", "landmark"), "dist", _ < _)
+
+  /** A relaxation round's new frontier: the `candidates` labels that
+    * the state lacks or that `beat` its label for the same `keys`
+    * (strictly — an equal label is not news).
+    */
+  private def improvements(candidates: DataFrame, state: DataFrame,
+                           keys: Seq[String], label: String,
+                           beat: (Column, Column) => Column): DataFrame =
+    candidates
+      .join(state.select(keys.map(col) :+ col(label).as("old"): _*), keys, "left")
+      .filter(col("old").isNull || beat(col(label), col("old")))
+      .select(keys.map(col) :+ col(label): _*)
+
+  /** A relaxation merge: per key, the `best` (min or max) of the
+    * state's label and the improved one.
+    */
+  private def keepBest(keys: Seq[String], label: String, best: Column => Column)
+                      (state: DataFrame, improved: DataFrame): DataFrame =
+    state.unionByName(improved).groupBy(keys.map(col): _*).agg(best(col(label)).as(label))
 
   /** Weighted single-source shortest paths from a landmark set —
     * Bellman–Ford frontier relaxation (non-negative weights). Unlike
@@ -122,39 +146,8 @@ object ShortestPaths {
 
     val init = landmarks.distinct.toDF("landmark")
       .select(col("landmark").as("id"), col("landmark"), lit(0L).as("dist"))
-    var state = Superstep.freshCheckpoint(init, eager = true)
-    var frontier = state
-    var frontierSize = frontier.count()
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (frontierSize > 0 && iter < maxIter) {
-      val candidates = frontier
-        .join(e.hint("shuffle_hash"), frontier("id") === e("src"))
-        .select(e("dst").as("id"), col("landmark"),
-          (col("dist") + col("weight")).as("dist"))
-        .groupBy(col("id"), col("landmark"))
-        .agg(min(col("dist")).as("dist"))
-      val improved = Superstep.freshCheckpoint(
-        candidates
-          .join(state.select(col("id"), col("landmark"),
-            col("dist").as("old")), Seq("id", "landmark"), "left")
-          .filter(col("old").isNull || col("dist") < col("old"))
-          .select(col("id"), col("landmark"), col("dist")), eager = false)
-      frontierSize = improved.count() // materializes the lazy checkpoint
-      if (frontierSize > 0) {
-        state = Superstep.freshCheckpoint(
-          state.unionByName(improved)
-            .groupBy(col("id"), col("landmark"))
-            .agg(min(col("dist")).as("dist")), eager = true)
-      }
-      frontier = improved
-      gc.tick(state, frontier)
-      iter += 1
-    }
-    require(frontierSize == 0,
-      s"Bellman-Ford still improving after $maxIter rounds — raise maxIter")
-    state
+    Superstep.frontier(spark, init, maxIter, "Bellman-Ford",
+      merge = keepBest(Seq("id", "landmark"), "dist", min(_)))(weightedStep(e))._1
   }
 
   /** Temporal earliest-arrival reachability (Wu et al. 2016, "Path
@@ -202,38 +195,16 @@ object ShortestPaths {
     val init = seeds.select(col("id")).distinct()
       .select(col("id"), lit(startTime).as("arrival"))
       .repartition(numPartitions, col("id"))
-    var state = Superstep.freshCheckpoint(init, eager = true)
-    var frontier = state
-    var frontierSize = frontier.count()
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (frontierSize > 0 && iter < maxIter) {
+    Superstep.frontier(spark, init, maxIter, "earliest-arrival",
+      merge = keepBest(Seq("id"), "arrival", min(_))) { (frontier, state) =>
       val candidates = frontier
         .join(e.hint("shuffle_hash"), frontier("id") === e("src"))
         .filter(col("ts") >= col("arrival")) // the temporal gate
         .select(e("dst").as("id"), col("ts").as("arrival"))
         .groupBy(col("id"))
         .agg(min(col("arrival")).as("arrival"))
-      val improved = Superstep.freshCheckpoint(
-        candidates
-          .join(state.select(col("id"), col("arrival").as("old")), Seq("id"), "left")
-          .filter(col("old").isNull || col("arrival") < col("old"))
-          .select(col("id"), col("arrival")), eager = false)
-      frontierSize = improved.count() // materializes the lazy checkpoint
-      if (frontierSize > 0) {
-        state = Superstep.freshCheckpoint(
-          state.unionByName(improved)
-            .groupBy(col("id"))
-            .agg(min(col("arrival")).as("arrival")), eager = true)
-      }
-      frontier = improved
-      gc.tick(state, frontier)
-      iter += 1
-    }
-    require(frontierSize == 0,
-      s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
-    state
+      improvements(candidates, state, Seq("id"), "arrival", _ < _)
+    }._1
   }
 
   /** Latest-departure reachability — [[earliestArrival]]'s mirror (the
@@ -271,39 +242,16 @@ object ShortestPaths {
     val init = targets.select(col("id")).distinct()
       .select(col("id"), lit(deadline).as("departure"))
       .repartition(numPartitions, col("id"))
-    var state = Superstep.freshCheckpoint(init, eager = true)
-    var frontier = state
-    var frontierSize = frontier.count()
-    var iter = 0
-    val gc = new Superstep.CheckpointGC(spark)
-
-    while (frontierSize > 0 && iter < maxIter) {
+    Superstep.frontier(spark, init, maxIter, "latest-departure",
+      merge = keepBest(Seq("id"), "departure", max(_))) { (frontier, state) =>
       val candidates = frontier
         .join(e.hint("shuffle_hash"), frontier("id") === e("dst"))
         .filter(col("ts") <= col("departure")) // must not overshoot u's LD
         .select(e("src").as("id"), col("ts").as("departure"))
         .groupBy(col("id"))
         .agg(max(col("departure")).as("departure"))
-      val improved = Superstep.freshCheckpoint(
-        candidates
-          .join(state.select(col("id"), col("departure").as("old")),
-            Seq("id"), "left")
-          .filter(col("old").isNull || col("departure") > col("old"))
-          .select(col("id"), col("departure")), eager = false)
-      frontierSize = improved.count() // materializes the lazy checkpoint
-      if (frontierSize > 0) {
-        state = Superstep.freshCheckpoint(
-          state.unionByName(improved)
-            .groupBy(col("id"))
-            .agg(max(col("departure")).as("departure")), eager = true)
-      }
-      frontier = improved
-      gc.tick(state, frontier)
-      iter += 1
-    }
-    require(frontierSize == 0,
-      s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
-    state
+      improvements(candidates, state, Seq("id"), "departure", _ > _)
+    }._1
   }
 
   /** Fastest-duration reachability — the remaining half of Wu et al.'s
@@ -398,8 +346,9 @@ object ShortestPaths {
       gc.tick(state, frontier)
       iter += 1
     }
-    require(frontierSize == 0,
-      s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
+    if (frontierSize > 0)
+      throw new IllegalStateException(
+        s"temporal relaxation still improving after $maxIter rounds — raise maxIter")
 
     Superstep.freshCheckpoint(
       state.select(col("id"), (col("a") - col("d")).as("duration"))
@@ -407,17 +356,6 @@ object ShortestPaths {
         .groupBy(col("id")).agg(min(col("duration")).as("duration")),
       eager = true)
   }
-
-  /** Graph Voronoi cells: every vertex assigned to its NEAREST
-    * landmark (ties → smallest landmark id) — proximity-based
-    * sharding / seed-expansion cluster assignment, and the discrete
-    * Voronoi diagram behind landmark routing schemes. One
-    * map-side-combinable lexicographic argmin over the [[run]]
-    * distance table; vertices unreachable from every landmark are
-    * absent (same contract as [[run]]).
-    *
-    * @return (id, landmark, dist)
-    */
 
   /** Exact diameter BOUNDS by the double-sweep heuristic (Magnien–
     * Latapy–Habib): BFS from a deterministic seed, re-BFS from its
@@ -452,6 +390,16 @@ object ShortestPaths {
       .toDF("seed", "u", "ecc_u", "lower", "upper")
   }
 
+  /** Graph Voronoi cells: every vertex assigned to its NEAREST
+    * landmark (ties → smallest landmark id) — proximity-based
+    * sharding / seed-expansion cluster assignment, and the discrete
+    * Voronoi diagram behind landmark routing schemes. One
+    * map-side-combinable lexicographic argmin over the [[run]]
+    * distance table; vertices unreachable from every landmark are
+    * absent (same contract as [[run]]).
+    *
+    * @return (id, landmark, dist)
+    */
   def nearestLandmark(spark: SparkSession,
                       symEdges: DataFrame,
                       landmarks: Seq[Long],

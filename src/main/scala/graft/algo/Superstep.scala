@@ -6,10 +6,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointStats
 
-/** The superstep skeleton ([[Superstep.iterate]]) and per-superstep
-  * durable checkpointing with per-partition lineage and convergence
-  * metrics (north rule; reference analogue: community-id write-back
-  * batches, community_detection.py:156-181, G-7).
+/** The superstep skeletons and per-superstep durable checkpointing
+  * with per-partition lineage and convergence metrics (north rule;
+  * reference analogue: community-id write-back batches,
+  * community_detection.py:156-181, G-7).
+  *
+  * Two skeletons own the loop, its storage and its stopping rule; the
+  * operator supplies only the per-round plan. [[Superstep.iterate]]
+  * carries one frame (PageRank, CC, LPA, the power iterations,
+  * Hyperball, the peeling refinements). [[Superstep.frontier]]
+  * carries a settled state plus the frontier that drives the next
+  * round (ShortestPaths' BFS, Bellman–Ford and temporal
+  * earliest-arrival / latest-departure, BowTie reachability, the
+  * Betweenness forward pass, SCC's backward reach). The loops left
+  * hand-written do not fit either shape:
+  *
+  *  - `Cascade`: the per-vertex counts are rewritten every round and
+  *    the frontier is read off the rewritten state, not merged into it;
+  *  - `ShortestPaths.fastestDuration`: the Pareto-merged state is
+  *    built before the round's frontier (merged minus old) is known;
+  *  - the `Betweenness` backward passes: a fixed top-down walk over
+  *    the forward pass's levels with two carried frames (the level's δ
+  *    and the accumulator) and no convergence test;
+  *  - `Coloring`: measures only every `checkEvery` rounds and carries
+  *    a periodically contracted edge frame;
+  *  - `Densest`: each round's measuring action collects driver-side
+  *    peel statistics, and a removal-tag frame rides along the edges;
+  *  - `KTruss`: the last round's support table outlives the loop;
+  *  - `ModularityRefine`: without `earlyStop` it runs no measuring
+  *    action and its frames belong to the caller's cleanup hook;
+  *  - `RandomWalks`: a fixed number of steps, with retired walks
+  *    carried as a lazy second frame until the final union;
+  *  - `Scc`'s trim and colouring phases: trim peels the graph state
+  *    (edges, vertices, settled) that every later round reads, and
+  *    all three phases draw on one round budget.
   *
   * Layout under `dir` (parquet-as-Iceberg table layout):
   *
@@ -162,10 +192,12 @@ object Superstep {
     *
     * Convergence policy: `iterate` never hides a cap stop — the flag
     * is returned, and each caller either reports it in its result
-    * (PageRank, LPA, the power iterations) or throws (CC and the
-    * peeling loops, whose partial answer would be wrong, not just
-    * imprecise). It adds no Spark job per superstep and changes no
-    * AQE setting; callers keep their run-level [[scope]].
+    * (PageRank, LPA, the power iterations) or throws
+    * `IllegalStateException` ending "raise maxIter" (CC, Hyperball and
+    * the peeling loops, whose partial answer would be wrong, not just
+    * imprecise — the policy [[frontier]] applies itself). It adds no
+    * Spark job per superstep and changes no AQE setting; callers keep
+    * their run-level [[scope]].
     */
   def iterate(spark: SparkSession, start: => DataFrame, maxIter: Int,
               ckpt: Option[Superstep] = None)
@@ -190,6 +222,45 @@ object Superstep {
       state.count()
     gc.tick(state)
     (state, steps, converged)
+  }
+
+  /** The frontier skeleton: [[iterate]]'s two-frame variant for BFS and
+    * label-correcting loops, whose state is the set of labels settled
+    * so far and whose next round reads only the rows the last round
+    * added or improved. `start` is checkpointed eagerly and is the
+    * first state and frontier. Each round checkpoints
+    * `expand(frontier, state)` lazily as the next frontier and counts
+    * it (the round's one measuring action, which also materializes
+    * it); a non-empty frontier is folded into the state by `merge`
+    * under an eager checkpoint — a union where settled rows never
+    * change (BFS), a min/max re-aggregation where they can improve
+    * (relaxation). After each round a [[CheckpointGC]] keeps only what
+    * the state and the frontier reach.
+    *
+    * Returns (state, rounds run) when a round finds nothing new; that
+    * last, empty round is counted. A frontier still live after
+    * `maxIter` rounds throws `IllegalStateException`: a partial
+    * reachability or distance labeling is wrong, not just imprecise.
+    */
+  def frontier(spark: SparkSession, start: DataFrame, maxIter: Int, what: String,
+               merge: (DataFrame, DataFrame) => DataFrame = _ unionByName _)
+              (expand: (DataFrame, DataFrame) => DataFrame): (DataFrame, Int) = {
+    val gc = new CheckpointGC(spark)
+    var state = freshCheckpoint(start, eager = true)
+    var frontier = state
+    var live = frontier.count()
+    var rounds = 0
+    while (live > 0) {
+      if (rounds >= maxIter)
+        throw new IllegalStateException(
+          s"$what frontier still live after $maxIter rounds — raise maxIter")
+      frontier = freshCheckpoint(expand(frontier, state), eager = false)
+      live = frontier.count() // materializes the lazy checkpoint
+      if (live > 0) state = freshCheckpoint(merge(state, frontier), eager = true)
+      gc.tick(state, frontier)
+      rounds += 1
+    }
+    (state, rounds)
   }
 
   /** The run-level entry of every superstep algorithm: runs `f` with

@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algo.{ModularityRefine, Superstep}
+import graft.algo.{ModularityRefine, ShortestPaths, Superstep}
 import graft.dedup.Dedup
 import graft.sim.Similarity
 
@@ -260,6 +262,59 @@ class PlanSpec extends AnyFunSuite {
       def count(re: String) = re.r.findAllIn(phys).size
       assert(count("""ENSURE_REQUIREMENTS""") === 1,
         s"only the distinct's exchange may shuffle:\n$phys")
+    }
+  }
+
+  /** The executed plan of a ShortestPaths round on the inputs its loop
+    * reads from round 2 on: the edge table checkpointed on src, round
+    * 1's frontier and the state `merge` folded it into, all
+    * checkpoints (so no side is small enough to broadcast).
+    */
+  private def landmarkRound(step: DataFrame => (DataFrame, DataFrame) => DataFrame,
+                            merge: (DataFrame, DataFrame) => DataFrame): SparkPlan = {
+    val e = Superstep.freshCheckpoint(
+      (0L until 80L).map(i => (i, (i * 3 + 1) % 80, i % 5)).toDF("src", "dst", "weight")
+        .repartition(4, col("src")), eager = true)
+    val s0 = Superstep.freshCheckpoint(
+      Seq((0L, 0L, 0L), (7L, 7L, 0L)).toDF("id", "landmark", "dist"), eager = true)
+    val f1 = Superstep.freshCheckpoint(step(e)(s0, s0), eager = true)
+    val s1 = Superstep.freshCheckpoint(merge(s0, f1), eager = true)
+    step(e)(f1, s1).queryExecution.executedPlan
+  }
+
+  /** The key columns of every shuffle the planner inserts, sorted. */
+  private def exchangeKeys(plan: SparkPlan): Seq[String] = plan.collect {
+    case x: ShuffleExchangeExec if x.shuffleOrigin == ENSURE_REQUIREMENTS =>
+      x.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+        .flatMap(_.references.map(_.name)).mkString(", ")
+  }.sorted
+
+  private def joins(plan: SparkPlan): Seq[String] = plan.collect {
+    case j: ShuffledHashJoinExec => s"ShuffledHashJoin ${j.joinType}"
+    case j: SortMergeJoinExec => s"SortMergeJoin ${j.joinType}"
+    case j: BroadcastHashJoinExec => s"BroadcastHashJoin ${j.joinType}"
+  }.sorted
+
+  test("ShortestPaths BFS round: edge join shuffle-hash on id, three exchanges") {
+    Superstep.withoutAQE(spark) {
+      val plan = landmarkRound(ShortestPaths.hopStep, _ unionByName _)
+      // the frontier moves to the edges' src partitioning; the min
+      // combine and the unioned state meet on (id, landmark), where
+      // the state anti-join is planned sort-merge
+      assert(exchangeKeys(plan) === Seq("id", "id, landmark", "id, landmark"), s"\n$plan")
+      assert(joins(plan) === Seq("ShuffledHashJoin Inner", "SortMergeJoin LeftAnti"), s"\n$plan")
+    }
+  }
+
+  test("ShortestPaths Bellman-Ford round: edge join shuffle-hash on id, two exchanges") {
+    Superstep.withoutAQE(spark) {
+      val plan = landmarkRound(ShortestPaths.weightedStep, (state, improved) =>
+        state.unionByName(improved).groupBy(col("id"), col("landmark"))
+          .agg(min(col("dist")).as("dist")))
+      // the min-merged state is already partitioned on (id, landmark),
+      // so its left join with the min combine adds no exchange
+      assert(exchangeKeys(plan) === Seq("id", "id, landmark"), s"\n$plan")
+      assert(joins(plan) === Seq("ShuffledHashJoin Inner", "SortMergeJoin LeftOuter"), s"\n$plan")
     }
   }
 

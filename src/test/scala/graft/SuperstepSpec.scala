@@ -152,4 +152,33 @@ class SuperstepSpec extends AnyFunSuite {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size == 1)
     assert(pinned(reached) && pinned(path))
   }
+
+  test("frontier counts the empty last round, skips an empty start, reads each frontier") {
+    // a 12-hop directed path from vertex 3: rounds 1–9 discover 4…12,
+    // round 10 finds nothing
+    val path = Superstep.freshCheckpoint(
+      (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+        .repartition(4, col("src")), eager = true)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+    val (reached, rounds) = Superstep.frontier(spark,
+      Seq(3L).toDF("id").repartition(4, col("id")), 20, "test") { (frontier, state) =>
+      // the frontier the previous round's tick kept must still be readable
+      seen += frontier.collect().map(_.getLong(0)).toSeq
+      BowTie.expand(path, frontier, state)
+    }
+    assert(rounds == 10)
+    assert(seen.toSeq == (3L to 12L).map(Seq(_)))
+    assert(reached.collect().map(_.getLong(0)).sorted.toSeq == (3L to 12L))
+
+    val (none, noRounds) = Superstep.frontier(spark, spark.range(0).toDF("id"), 20, "test") {
+      (_, _) => fail("an empty start runs no round")
+    }
+    assert(noRounds == 0 && none.isEmpty)
+
+    val e = intercept[IllegalStateException] {
+      Superstep.frontier(spark, Seq(3L).toDF("id").repartition(4, col("id")), 9, "test")(
+        BowTie.expand(path, _, _))
+    }
+    assert(e.getMessage.contains("raise maxIter"))
+  }
 }
