@@ -62,6 +62,10 @@ object ConnectedComponents {
   /** @param edges undirected edge list (either orientation, self-loops ok)
     * @param vertices optional full vertex set (id) so isolated vertices
     *                 get their own component
+    * @param numPartitions unread: the star rounds' exchanges use
+    *                 `spark.sql.shuffle.partitions`. Kept in the
+    *                 signature because callers pass `maxIter` after it
+    *                 positionally
     * @return (id, component) with component = min member id
     */
   def run(spark: SparkSession,
@@ -136,6 +140,8 @@ object ConnectedComponents {
     * @param deltaEdges edges NEW since the prior run (either
     *                   orientation; overlap with old edges is harmless,
     *                   it only adds redundant connectivity)
+    * @param numPartitions passed on to [[run]], which does not read it
+    *                   (exchanges use `spark.sql.shuffle.partitions`)
     * @return (id, component) over all prior vertices plus delta
     *         endpoints, component = min member id — identical to a
     *         fresh [[run]] over the full updated graph

@@ -83,8 +83,8 @@ object Coreness {
         .filter(col("c") =!= col("prev")).count()
       Superstep.Step(next, changed == 0)
     }
-    require(converged,
-      s"coreness refinement did not converge within $maxIter rounds")
+    if (!converged) throw new IllegalStateException(
+      s"coreness refinement did not converge within $maxIter rounds — raise maxIter")
     state.select(col("id"), col("c").as("coreness"))
   }
 }

@@ -101,7 +101,8 @@ object Densest {
         e = next; round += 1
       }
     }
-    require(done, s"densest-subgraph peel did not finish within $maxIter rounds")
+    if (!done) throw new IllegalStateException(
+      s"densest-subgraph peel did not finish within $maxIter rounds — raise maxIter")
 
     if (stats.isEmpty) Result(spark.range(0).select(col("id")), 0L, 0L, 0)
     else {

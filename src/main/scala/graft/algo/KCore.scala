@@ -53,7 +53,7 @@ object KCore {
     }
     // a silently truncated peel would present sub-k degrees as the
     // k-core — fail loudly instead (sibling algos report `converged`)
-    require(stable,
+    if (!stable) throw new IllegalStateException(
       s"k-core peeling did not stabilize within $maxIter rounds — raise maxIter")
     e.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_deg"))
   }
@@ -98,7 +98,7 @@ object KCore {
       size = nextSize
       Superstep.Step(next, same)
     }
-    require(stable,
+    if (!stable) throw new IllegalStateException(
       s"s-core peeling did not stabilize within $maxIter rounds — raise maxIter")
     e.groupBy(col("src").as("id")).agg(sum(col("weight")).as("core_strength"))
   }

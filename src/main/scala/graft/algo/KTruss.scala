@@ -78,7 +78,7 @@ object KTruss {
       changed = nextSize != size
       cur = next; size = nextSize; lastSup = sup; iter += 1
     }
-    require(!changed,
+    if (changed) throw new IllegalStateException(
       s"k-truss peeling did not stabilize within $maxIter rounds — raise maxIter")
     val finalSup = if (lastSup != null) lastSup else edgeSupport(cur, numPartitions)
     cur.join(

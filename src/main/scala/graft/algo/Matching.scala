@@ -54,21 +54,15 @@ object Matching {
           symEdges: DataFrame,
           numPartitions: Int = 32,
           maxIter: Int = 200): DataFrame = Superstep.scope(spark) {
-    val gc = new Superstep.CheckpointGC(spark)
-    var e = Superstep.freshCheckpoint(
-      symEdges.select(
-          least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-        .withColumn("k", edgeKey(col("u"), col("v")))
-        .repartition(numPartitions, col("u")), eager = true)
-
-    var liveCount = e.count()
-    var out: DataFrame = null // lazily reads every round's winners
-    var round = 0
-
-    while (liveCount > 0 && round < maxIter) {
-      round += 1
+    Superstep.peel(spark, Superstep.freshCheckpoint(
+        symEdges.select(
+            least(col("src"), col("dst")).as("u"),
+            greatest(col("src"), col("dst")).as("v"))
+          .filter(col("u") =!= col("v")).distinct()
+          .withColumn("k", edgeKey(col("u"), col("v")))
+          .repartition(numPartitions, col("u")), eager = true),
+      maxIter, "matching",
+      "adjacent edge-key collision — widen the key for this id space") { (e, r) =>
       // per-vertex minimum incident key — one two-sided projection,
       // map-side min-combined before the (vertex) exchange
       val vmin = e.select(col("u").as("vid"), col("k"))
@@ -85,34 +79,22 @@ object Matching {
             .hint("shuffle_hash"), Seq("v"))
           .filter(col("k") <= col("mu") && col("k") <= col("mv"))
           .select(col("u"), col("v")), eager = true)
-
-      out = {
-        val won = winners.withColumn("round", lit(round.toLong))
-        if (out == null) won else out.unionAll(won)
-      }
-
-      // matched vertices retire with every incident edge; duplicates
-      // in the retire list are fine (anti-join right side)
-      val matched = winners.select(col("u").as("vid"))
-        .unionAll(winners.select(col("v").as("vid")))
-      val nextE = Superstep.freshCheckpoint(
-        e.join(matched.select(col("vid").as("u")).hint("shuffle_hash"),
-            Seq("u"), "left_anti")
-          .join(matched.select(col("vid").as("v")).hint("shuffle_hash"),
-            Seq("v"), "left_anti"), eager = true)
-      e = nextE
-      gc.tick(e, out)
-      val nextCount = e.count()
-      require(nextCount < liveCount,
-        s"matching round $round made no progress ($liveCount live edges): " +
-          "adjacent edge-key collision — widen the key for this id space")
-      liveCount = nextCount
+      (winners.withColumn("round", lit(r.toLong)), retire(e, winners))
     }
-    require(liveCount == 0,
-      s"matching did not settle within $maxIter rounds — raise maxIter")
-    val res = out.localCheckpoint(false)
-    res.count()
-    res
+  }
+
+  /** The live edges minus every edge incident to a matched vertex,
+    * eagerly checkpointed: matched vertices retire with every incident
+    * edge. Duplicates in the retire list are fine (anti-join right side).
+    */
+  private def retire(e: DataFrame, winners: DataFrame): DataFrame = {
+    val matched = winners.select(col("u").as("vid"))
+      .unionAll(winners.select(col("v").as("vid")))
+    Superstep.freshCheckpoint(
+      e.join(matched.select(col("vid").as("u")).hint("shuffle_hash"),
+          Seq("u"), "left_anti")
+        .join(matched.select(col("vid").as("v")).hint("shuffle_hash"),
+          Seq("v"), "left_anti"), eager = true)
   }
 
   /** Locally-heaviest maximal matching (Preis 1999; Manne–Bisseling
@@ -121,7 +103,7 @@ object Matching {
     * (weight DESC, scrambled key ASC). Greedy-by-weight analysis gives
     * the classic ½-approximation of MAXIMUM weight matching: when an
     * edge e retires, its matched neighbor e' was locally heaviest
-    * while e was live, so w(e') ≥ w(e), and each matched edge absorbs
+    * as long as e was live, so w(e') ≥ w(e), and each matched edge absorbs
     * at most two OPT edges.
     *
     * Progress: among the max-weight live edges, the one with the
@@ -129,7 +111,8 @@ object Matching {
     * endpoints, so every round matches ≥ 1 edge. Unlike the unweighted
     * peel, adversarial weight gradients (a monotone-weight path) can
     * serialize rounds — the expected O(log m) regime needs weights
-    * without long monotone chains, which the `require` surfaces.
+    * without long monotone chains; a chain longer than `maxIter`
+    * rounds throws `IllegalStateException` ("raise maxIter").
     *
     * Scale shape, per round: TWO map-side-combinable per-vertex aggs
     * instead of one — the incident max-WEIGHT over the live edges,
@@ -147,23 +130,16 @@ object Matching {
                   weightedEdges: DataFrame,
                   numPartitions: Int = 32,
                   maxIter: Int = 200): DataFrame = Superstep.scope(spark) {
-    val gc = new Superstep.CheckpointGC(spark)
-    var e = Superstep.freshCheckpoint(
-      weightedEdges.select(
-          least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"),
-          col("weight").cast("long").as("w"))
-        .filter(col("u") =!= col("v"))
-        .groupBy(col("u"), col("v")).agg(max(col("w")).as("w"))
-        .withColumn("k", edgeKey(col("u"), col("v")))
-        .repartition(numPartitions, col("u")), eager = true)
-
-    var liveCount = e.count()
-    var out: DataFrame = null // lazily reads every round's winners
-    var round = 0
-
-    while (liveCount > 0 && round < maxIter) {
-      round += 1
+    Superstep.peel(spark, Superstep.freshCheckpoint(
+        weightedEdges.select(
+            least(col("src"), col("dst")).as("u"),
+            greatest(col("src"), col("dst")).as("v"),
+            col("weight").cast("long").as("w"))
+          .filter(col("u") =!= col("v"))
+          .groupBy(col("u"), col("v")).agg(max(col("w")).as("w"))
+          .withColumn("k", edgeKey(col("u"), col("v")))
+          .repartition(numPartitions, col("u")), eager = true),
+      maxIter, "weighted matching", "adjacent edge-key collision") { (e, r) =>
       // stage 1: per-vertex max incident weight over the live edges
       val vmax = e.select(col("u").as("vid"), col("w"))
         .unionAll(e.select(col("v").as("vid"), col("w")))
@@ -192,33 +168,8 @@ object Matching {
             .hint("shuffle_hash"), Seq("v"))
           .filter(col("k") <= col("ku") && col("k") <= col("kv"))
           .select(col("u"), col("v"), col("w")), eager = true)
-
-      out = {
-        val won = winners.withColumn("round", lit(round.toLong))
-        if (out == null) won else out.unionAll(won)
-      }
-
-      val matched = winners.select(col("u").as("vid"))
-        .unionAll(winners.select(col("v").as("vid")))
-      val nextE = Superstep.freshCheckpoint(
-        e.join(matched.select(col("vid").as("u")).hint("shuffle_hash"),
-            Seq("u"), "left_anti")
-          .join(matched.select(col("vid").as("v")).hint("shuffle_hash"),
-            Seq("v"), "left_anti"), eager = true)
-      e = nextE
-      gc.tick(e, out)
-      val nextCount = e.count()
-      require(nextCount < liveCount,
-        s"weighted matching round $round made no progress " +
-          s"($liveCount live edges): adjacent edge-key collision")
-      liveCount = nextCount
+      (winners.withColumn("round", lit(r.toLong)), retire(e, winners))
     }
-    require(liveCount == 0,
-      s"weighted matching did not settle within $maxIter rounds — " +
-        "monotone weight chains serialize the peel; raise maxIter")
-    val res = out.localCheckpoint(false)
-    res.count()
-    res
   }
 
   /** One multilevel COARSENING step (Hendrickson–Leland 1995; the

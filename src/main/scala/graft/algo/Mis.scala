@@ -30,9 +30,8 @@ import org.apache.spark.sql.functions._
   * budget. The priority is computed arithmetically FROM the endpoint
   * id, so no key table ever joins onto the edges. Expected O(log n)
   * rounds with scrambled priorities; each round's edge set shrinks
-  * monotonically, with [[Scc]]-style explicit checkpoint ownership
-  * (eager successor, then free the predecessor; winner frames stay
-  * pinned until the final union is checkpointed).
+  * monotonically. The loop is [[Superstep.peel]] over the live
+  * vertices and their edges.
   */
 object Mis {
 
@@ -100,64 +99,46 @@ object Mis {
                      maxIter: Int,
                      removeNeighbors: Boolean): DataFrame =
     Superstep.scope(spark) {
-      val gc = new Superstep.CheckpointGC(spark)
-      val base = symEdges.select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst"))
-      var e = Superstep.freshCheckpoint(
-        base.repartition(numPartitions, col("src")), eager = true)
-      val fromEdges = e.select(col("src").as("id")).distinct()
-      var live = Superstep.freshCheckpoint(
-        vertices.map(_.select(col("id")).unionAll(fromEdges).distinct())
-          .getOrElse(fromEdges), eager = true)
+      Superstep.peel(spark, {
+        val e = Superstep.freshCheckpoint(
+          symEdges.select(col("src"), col("dst"))
+            .filter(col("src") =!= col("dst"))
+            .repartition(numPartitions, col("src")), eager = true)
+        val fromEdges = e.select(col("src").as("id")).distinct()
+        (Superstep.freshCheckpoint(
+          vertices.map(_.select(col("id")).unionAll(fromEdges).distinct())
+            .getOrElse(fromEdges), eager = true), e)
+      }, maxIter, if (removeNeighbors) "MIS" else "greedy coloring",
+        // ties between adjacent survivors would stall forever
+        "adjacent priority-key collision — use a wider key for this id space") {
+        case ((live, e), r) =>
+          // min neighbor key over the LIVE graph — e is maintained
+          // live-only, so this is one agg, no key join
+          val nbrMin = e.groupBy(col("src").as("id"))
+            .agg(min(key(col("dst"))).as("mn"))
+          val sel = Superstep.freshCheckpoint(
+            live.join(nbrMin.hint("shuffle_hash"), Seq("id"), "left")
+              .filter(col("mn").isNull || key(col("id")) < col("mn"))
+              .select(col("id")), eager = true)
 
-      var liveCount = live.count()
-      var out: DataFrame = null // lazily reads every round's winners
-      var round = 0
-
-      while (liveCount > 0 && round < maxIter) {
-        round += 1
-        // min neighbor key over the LIVE graph — e is maintained
-        // live-only, so this is one agg, no key join
-        val nbrMin = e.groupBy(col("src").as("id"))
-          .agg(min(key(col("dst"))).as("mn"))
-        val sel = Superstep.freshCheckpoint(
-          live.join(nbrMin.hint("shuffle_hash"), Seq("id"), "left")
-            .filter(col("mn").isNull || key(col("id")) < col("mn"))
-            .select(col("id")), eager = true)
-
-        val won = sel.withColumn("round", lit(round.toLong))
-        out = if (out == null) won else out.unionAll(won)
-
-        // no distinct on the neighborhood list: it only feeds the
-        // left_anti below, which is insensitive to right-side
-        // duplicates — deduping would cost an extra edge-scale exchange
-        val removed =
-          if (removeNeighbors)
-            sel.unionAll(
-              e.join(sel.select(col("id").as("src")).hint("shuffle_hash"),
-                Seq("src"), "left_semi").select(col("dst").as("id")))
-          else sel
-        val nextLive = Superstep.freshCheckpoint(
-          live.join(removed.hint("shuffle_hash"), Seq("id"), "left_anti"),
-          eager = true)
-        val nextE = Superstep.freshCheckpoint(
-          e.join(nextLive.select(col("id").as("src")).hint("shuffle_hash"),
-              Seq("src"), "left_semi")
-            .join(nextLive.select(col("id").as("dst")).hint("shuffle_hash"),
-              Seq("dst"), "left_semi"), eager = true)
-        live = nextLive; e = nextE
-        gc.tick(live, e, out)
-        val nextCount = live.count()
-        // ties between adjacent survivors would stall forever — fail loud
-        require(nextCount < liveCount,
-          s"MIS round $round made no progress ($liveCount live): adjacent " +
-            "priority-key collision — use a wider key for this id space")
-        liveCount = nextCount
+          // no distinct on the neighborhood list: it only feeds the
+          // left_anti below, which is insensitive to right-side
+          // duplicates — deduping would cost an extra edge-scale exchange
+          val removed =
+            if (removeNeighbors)
+              sel.unionAll(
+                e.join(sel.select(col("id").as("src")).hint("shuffle_hash"),
+                  Seq("src"), "left_semi").select(col("dst").as("id")))
+            else sel
+          val nextLive = Superstep.freshCheckpoint(
+            live.join(removed.hint("shuffle_hash"), Seq("id"), "left_anti"),
+            eager = true)
+          val nextE = Superstep.freshCheckpoint(
+            e.join(nextLive.select(col("id").as("src")).hint("shuffle_hash"),
+                Seq("src"), "left_semi")
+              .join(nextLive.select(col("id").as("dst")).hint("shuffle_hash"),
+                Seq("dst"), "left_semi"), eager = true)
+          (sel.withColumn("round", lit(r.toLong)), (nextLive, nextE))
       }
-      require(liveCount == 0,
-        s"MIS did not settle within $maxIter rounds — raise maxIter")
-      val res = out.localCheckpoint(false)
-      res.count()
-      res
     }
 }

@@ -43,7 +43,6 @@ object Mst {
           weightedEdges: DataFrame,
           numPartitions: Int = 32,
           maxIter: Int = 64): DataFrame = Superstep.scope(spark) {
-    val gc = new Superstep.CheckpointGC(spark)
     val canon = weightedEdges.select(
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"),
@@ -53,16 +52,11 @@ object Mst {
 
     // e carries the surviving CROSS edges with their component labels;
     // round 0 starts fully labeled by own id (every vertex its own comp)
-    var e = Superstep.freshCheckpoint(
-      canon.select(col("u"), col("v"), col("w"),
-          col("u").as("cu"), col("v").as("cv"))
-        .repartition(numPartitions, col("u")), eager = true)
-    var eCount = e.count()
-    var out: DataFrame = null // lazily reads every round's picks
-    var round = 0
-
-    while (eCount > 0 && round < maxIter) {
-      round += 1
+    Superstep.peel(spark, Superstep.freshCheckpoint(
+        canon.select(col("u"), col("v"), col("w"),
+            col("u").as("cu"), col("v").as("cv"))
+          .repartition(numPartitions, col("u")), eager = true),
+      maxIter, "Borůvka", "no component merged") { (e, _) =>
       // per-component argmin outgoing edge, both directions; the
       // struct min is lexicographic on (w, u, v, other) and (w, u, v)
       // is already unique per edge, so `other` never decides
@@ -76,9 +70,6 @@ object Mst {
             col("s.w").as("w"), col("s.u").as("u"), col("s.v").as("v")),
         eager = true)
 
-      val won = picks.select(col("u"), col("v"), col("w")).distinct()
-      out = if (out == null) won else out.unionAll(won)
-
       // contract the pick pseudo-forest (textbook Borůvka hooking):
       // under a strict total edge order every pick-graph component has
       // exactly ONE cycle and it has length 2 — the component's
@@ -89,7 +80,7 @@ object Mst {
       // converges in O(log depth) comp-sized self-joins — no nested
       // CC run. Label choice is invisible downstream: the next round's
       // picks depend on the component PARTITION, not the label values.
-      val mapping = contract(picks, numPartitions)
+      val mapping = contract(spark, picks, numPartitions)
       val mu = mapping.select(col("id").as("cu"), col("component").as("ncu"))
       val mv = mapping.select(col("id").as("cv"), col("component").as("ncv"))
       val nextE = Superstep.freshCheckpoint(
@@ -99,20 +90,8 @@ object Mst {
             coalesce(col("ncu"), col("cu")).as("cu"),
             coalesce(col("ncv"), col("cv")).as("cv"))
           .filter(col("cu") =!= col("cv")), eager = true)
-      e = nextE
-      gc.tick(e, out)
-      val nextCount = e.count()
-      require(nextCount < eCount,
-        s"Borůvka round $round made no progress ($eCount cross edges)")
-      eCount = nextCount
+      (picks.select(col("u"), col("v"), col("w").as("weight")).distinct(), nextE)
     }
-    require(eCount == 0,
-      s"Borůvka did not settle within $maxIter rounds — raise maxIter")
-    val res = out
-      .withColumnRenamed("w", "weight")
-      .localCheckpoint(false)
-    res.count()
-    res
   }
 
   /** Resolve the pick pseudo-forest to per-component roots: detect the
@@ -120,20 +99,19 @@ object Mst {
     * endpoint, then pointer-jump to the root. Returns (id, component)
     * for every comp appearing in `picks`.
     */
-  private def contract(picks: DataFrame, numPartitions: Int): DataFrame = {
+  private def contract(spark: SparkSession, picks: DataFrame,
+                       numPartitions: Int): DataFrame = {
     // mutual iff the pick of `other` points straight back
     val back = picks.select(col("comp").as("other"), col("other").as("backTo"))
-    var par = Superstep.freshCheckpoint(
-      picks.select(col("comp"), col("other"))
-        .join(back.hint("shuffle_hash"), Seq("other"), "left")
-        .select(col("comp").as("id"),
-          when(col("backTo") === col("comp") && col("comp") < col("other"),
-            col("comp")).otherwise(col("other")).as("par"))
-        .repartition(numPartitions, col("id")), eager = true)
-    var changed = 1L
-    var jumps = 0
-    while (changed > 0 && jumps < 64) {
-      jumps += 1
+    val (par, _, rooted) = Superstep.iterate(spark,
+      Superstep.freshCheckpoint(
+        picks.select(col("comp"), col("other"))
+          .join(back.hint("shuffle_hash"), Seq("other"), "left")
+          .select(col("comp").as("id"),
+            when(col("backTo") === col("comp") && col("comp") < col("other"),
+              col("comp")).otherwise(col("other")).as("par"))
+          .repartition(numPartitions, col("id")), eager = true),
+      64) { par =>
       // par is keyed by id (one pick per comp), so par(par(x)) is one
       // self-join; every par value is itself a picked comp, so the
       // inner join is lossless
@@ -141,12 +119,15 @@ object Mst {
       val next = Superstep.freshCheckpoint(
         par.join(hop.hint("shuffle_hash"), par("par") === col("hid"))
           .select(par("id"), col("gpar").as("par")), eager = true)
-      changed = next.join(par.withColumnRenamed("par", "old")
+      val changed = next.join(par.withColumnRenamed("par", "old")
           .hint("shuffle_hash"), Seq("id"))
         .filter(col("par") =!= col("old")).count()
-      par = next
+      Superstep.Step(next, changed == 0)
     }
-    require(changed == 0, "Borůvka contraction did not converge in 64 jumps")
+    // 64 jumps root any pick tree shallower than 2⁶³: a strict total
+    // edge order never reaches this
+    if (!rooted) throw new IllegalStateException(
+      "Borůvka contraction did not converge in 64 pointer jumps")
     par.select(col("id"), col("par").as("component"))
   }
 

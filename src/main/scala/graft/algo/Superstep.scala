@@ -11,15 +11,19 @@ import org.apache.spark.sql.graft.CheckpointStats
   * reference analogue: community-id write-back batches,
   * community_detection.py:156-181, G-7).
   *
-  * Two skeletons own the loop, its storage and its stopping rule; the
-  * operator supplies only the per-round plan. [[Superstep.iterate]]
+  * Three skeletons own the loop, its storage and its stopping rule;
+  * the operator supplies only the per-round plan. [[Superstep.iterate]]
   * carries one frame (PageRank, CC, LPA, the power iterations,
-  * Hyperball, the peeling refinements). [[Superstep.frontier]]
-  * carries a settled state plus the frontier that drives the next
-  * round (ShortestPaths' BFS, Bellman–Ford and temporal
-  * earliest-arrival / latest-departure, BowTie reachability, the
-  * Betweenness forward pass, SCC's backward reach). The loops left
-  * hand-written do not fit either shape:
+  * Hyperball, the peeling refinements, Borůvka's pointer jumping, and
+  * the fixed-round TextRank and FeatureProp layers).
+  * [[Superstep.frontier]] carries a settled state plus the frontier
+  * that drives the next round (ShortestPaths' BFS, Bellman–Ford and
+  * temporal earliest-arrival / latest-departure, BowTie reachability,
+  * the Betweenness forward pass, SCC's backward reach).
+  * [[Superstep.peel]] carries a shrinking live set and unions each
+  * round's winners (Kahn layering, MIS and greedy coloring, the
+  * matchings, Borůvka). Of the loops that run inside [[scope]], these
+  * are hand-written, because they fit none of the three shapes:
   *
   *  - `Cascade`: the per-vertex counts are rewritten every round and
   *    the frontier is read off the rewritten state, not merged into it;
@@ -35,11 +39,16 @@ import org.apache.spark.sql.graft.CheckpointStats
   *  - `KTruss`: the last round's support table outlives the loop;
   *  - `ModularityRefine`: without `earlyStop` it runs no measuring
   *    action and its frames belong to the caller's cleanup hook;
-  *  - `RandomWalks`: a fixed number of steps, with retired walks
-  *    carried as a lazy second frame until the final union;
+  *  - `RandomWalks`: the uniform walks take a fixed number of steps,
+  *    with retired walks carried as a lazy second frame until the
+  *    final union; the biased walks count their pending walks before
+  *    the first round;
   *  - `Scc`'s trim and colouring phases: trim peels the graph state
   *    (edges, vertices, settled) that every later round reads, and
   *    all three phases draw on one round budget.
+  *
+  * Iterations that run with AQE on do not enter [[scope]] and are not
+  * listed.
   *
   * Layout under `dir` (parquet-as-Iceberg table layout):
   *
@@ -193,9 +202,14 @@ object Superstep {
     * Convergence policy: `iterate` never hides a cap stop — the flag
     * is returned, and each caller either reports it in its result
     * (PageRank, LPA, the power iterations) or throws
-    * `IllegalStateException` ending "raise maxIter" (CC, Hyperball and
-    * the peeling loops, whose partial answer would be wrong, not just
-    * imprecise — the policy [[frontier]] applies itself). It adds no
+    * `IllegalStateException` ending "raise maxIter" (CC, Hyperball,
+    * k-core, s-core, coreness and trussness, whose partial answer would
+    * be wrong, not just imprecise — the policy [[frontier]] and [[peel]]
+    * apply themselves). Borůvka's pointer jumping throws without the
+    * hint: its 64-jump cap is fixed and unreachable under a strict edge
+    * order. Fixed-round callers (WL, PIC, Fiedler, SimRank, hitting
+    * time, seeded LPA, batch personalized PageRank, TextRank,
+    * FeatureProp) never measure, so they have no cap stop. It adds no
     * Spark job per superstep and changes no AQE setting; callers keep
     * their run-level [[scope]].
     */
@@ -261,6 +275,54 @@ object Superstep {
       rounds += 1
     }
     (state, rounds)
+  }
+
+  /** The peel skeleton: the shrink-and-emit loops (Kahn layering, MIS
+    * and greedy coloring, the matchings, Borůvka), whose live set
+    * shrinks every round and whose answer is the union of every round's
+    * winners. `start` is the first live value, built after the
+    * skeleton's [[CheckpointGC]] so its checkpoints are freed once no
+    * round reads them: a DataFrame, or a tuple whose first frame is the
+    * counted live set and whose other frames ride along (the live
+    * edges). Its frames are the caller's eager checkpoints; the skeleton
+    * counts the first. `round(live, r)`, r = 1, 2, …, returns the
+    * round's winners, drawn from the live set, and the next live value.
+    * After each round the skeleton keeps only what the live frames and
+    * the winners reach and counts the live set (the round's one action
+    * beyond its own checkpoints).
+    *
+    * Two stops, neither silent: a round that leaves every live row
+    * live is a stall caused by the input (a cycle, a key collision) and
+    * fails `require` with the caller's `stall` hint; live rows left
+    * after `maxIter` rounds throw `IllegalStateException` ("raise
+    * maxIter"). The union of the winners is checkpointed lazily and
+    * counted. An empty start runs one round, so the empty answer still
+    * has the winners' columns.
+    */
+  def peel[L](spark: SparkSession, start: => L, maxIter: Int, what: String, stall: String)
+             (round: (L, Int) => (DataFrame, L)): DataFrame = {
+    val gc = new CheckpointGC(spark)
+    def size(live: L): Long = frames(live).head.count()
+    var live = start
+    var n = size(live)
+    var won = List.empty[DataFrame] // newest first
+    var r = 0
+    do {
+      if (n > 0 && r >= maxIter)
+        throw new IllegalStateException(
+          s"$what did not settle within $maxIter rounds — raise maxIter")
+      r += 1
+      val (winners, next) = round(live, r)
+      won ::= winners
+      live = next
+      gc.tick(frames(live) ++ won: _*)
+      val m = size(live)
+      require(n == 0 || m < n, s"$what round $r made no progress ($n live rows): $stall")
+      n = m
+    } while (n > 0)
+    val res = won.reverse.reduce(_ unionAll _).localCheckpoint(false)
+    res.count()
+    res
   }
 
   /** The run-level entry of every superstep algorithm: runs `f` with

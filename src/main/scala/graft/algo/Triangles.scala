@@ -60,14 +60,6 @@ object Triangles {
     if (cnt.isNullAt(0)) 0L else cnt.getLong(0)
   }
 
-  /** Degree-oriented triangle ENUMERATION — the one copy of the
-    * scale-critical kernel shared by [[perVertex]], `KTruss` and
-    * `LinkScores` (orientation tie-break, repartition, shuffle_hash
-    * hints live here and nowhere else). Each triangle appears exactly
-    * once as (u, v, w): (u,v) an oriented edge, w a common
-    * out-neighbor. [[countTriangles]] keeps its fused count-only tail
-    * (native `sorted_intersect_count`, no per-triangle rows).
-    */
   /** DOULION sampled triangle count (Tsourakakis et al., KDD 2009):
     * keep each canonical edge at rate num/den via the deterministic
     * sampleKeep scramble on the packed (u, v) key, count triangles
@@ -99,6 +91,14 @@ object Triangles {
         round(col("estimate_raw"), 6).as("estimate"))
   }
 
+  /** Degree-oriented triangle ENUMERATION — the one copy of the
+    * scale-critical kernel shared by [[perVertex]], `KTruss` and
+    * `LinkScores` (orientation tie-break, repartition, shuffle_hash
+    * hints live here and nowhere else). Each triangle appears exactly
+    * once as (u, v, w): (u,v) an oriented edge, w a common
+    * out-neighbor. [[countTriangles]] keeps its fused count-only tail
+    * (native `sorted_intersect_count`, no per-triangle rows).
+    */
   private[graft] def enumerate(undirectedPairs: DataFrame,
                                numPartitions: Int): DataFrame = {
     val pairs = undirectedPairs.select(col("src"), col("dst"))

@@ -95,8 +95,8 @@ object Trussness {
         .filter(col("t") =!= col("prev")).count()
       Superstep.Step(next, changed == 0)
     }
-    require(converged,
-      s"trussness refinement did not converge within $maxIter rounds")
+    if (!converged) throw new IllegalStateException(
+      s"trussness refinement did not converge within $maxIter rounds — raise maxIter")
     state.select(col("u").as("src"), col("v").as("dst"),
       col("t").as("trussness"))
   }

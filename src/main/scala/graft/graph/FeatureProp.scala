@@ -31,7 +31,7 @@ object FeatureProp {
                    symEdges: DataFrame,
                    features: DataFrame,
                    layers: Int = 2,
-                   numPartitions: Int = 32): DataFrame = {
+                   numPartitions: Int = 32): DataFrame = Superstep.scope(spark) {
     require(layers >= 1, "need at least one aggregation layer")
     val e = Superstep.freshCheckpoint(
       symEdges.select(col("src"), col("dst"))
@@ -42,26 +42,21 @@ object FeatureProp {
       .select(col("id"), coalesce(col("f"), lit(0L)).as("f"))
     val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
 
-    var acc = Superstep.freshCheckpoint(
+    // state columns (id, degree, f, s1, …): layer l reads the last one
+    val (acc, _, _) = Superstep.iterate(spark, Superstep.freshCheckpoint(
       verts.join(deg, Seq("id")).select(col("id"), col("degree"), col("f")),
-      eager = true)
-    var prev = "f"
-    for (l <- 1 to layers) {
+      eager = true), layers) { acc =>
+      val prev = acc.columns.last
+      val l = acc.columns.length - 2
       val sums = e
         .join(acc.select(col("id"), col(prev)).hint("shuffle_hash"),
           e("src") === col("id"))
         .groupBy(e("dst").as("id")).agg(sum(col(prev)).as(s"s$l"))
-      val next = Superstep.freshCheckpoint(
+      Superstep.Step(Superstep.freshCheckpoint(
         acc.join(sums, Seq("id"), "left")
-          .withColumn(s"s$l", coalesce(col(s"s$l"), lit(0L))), eager = true)
-      Superstep.freeCheckpoint(acc)
-      acc = next
-      prev = s"s$l"
+          .withColumn(s"s$l", coalesce(col(s"s$l"), lit(0L))), eager = true))
     }
-    val out = acc.withColumn("mean1",
-      round(col("s1").cast("double") / col("degree"), 6))
-    Superstep.freeCheckpoint(e)
-    out
+    acc.withColumn("mean1", round(col("s1").cast("double") / col("degree"), 6))
   }
 
   /** Graph-signal smoothness — the Dirichlet energy of a vertex

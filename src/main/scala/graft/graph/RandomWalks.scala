@@ -231,7 +231,7 @@ object RandomWalks {
       gc.tick(state)
       round += 1
     }
-    require(pending == 0,
+    if (pending > 0) throw new IllegalStateException(
       s"biased walks still rejecting after $maxRounds rounds — raise maxRounds")
     Superstep.freshCheckpoint(
       state.select(col("start"), col("replica"), col("path")), eager = true)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.algo.Superstep
+
 /** TextRank extractive summarization (Mihalcea & Tarau, EMNLP 2004) —
   * weighted PageRank over each document's sentence-similarity graph,
   * selecting the top-k central sentences: the corpus-distillation op
@@ -59,15 +61,18 @@ object TextRank {
 
   def run(docs: DataFrame, iters: Int = 5, topK: Int = 3,
           width: Int = 8, numPartitions: Int = 32,
-          idCol: String = "doc_id", textCol: String = "text"): Result = {
+          idCol: String = "doc_id",
+          textCol: String = "text"): Result = Superstep.scope(docs.sparkSession) {
     val sent = sentences(docs, width, idCol, textCol)
     val edges = simEdges(sent)
       .repartition(numPartitions, col("doc_id"), col("src"))
       .localCheckpoint(true)
 
     // vertex set = every sentence (isolated ones still rank: they get
-    // teleport + their doc's dangling share)
-    val verts = sent.select(col("doc_id"), col("sid")).distinct()
+    // teleport + their doc's dangling share). Fresh ids: `edges` keeps
+    // `sent`'s, and with AQE off the join below cannot re-instance the
+    // checkpoint to tell the two `doc_id`s apart (INTERNAL_ERROR)
+    val verts = sent.select(col("doc_id").as("doc_id"), col("sid").as("sid")).distinct()
     val outw = edges.groupBy(col("doc_id"), col("src").as("sid"))
       .agg(sum(col("w")).as("outw"))
     val base = verts.join(outw, Seq("doc_id", "sid"), "left")
@@ -77,13 +82,13 @@ object TextRank {
       .localCheckpoint(true)
     val nDoc = base.groupBy(col("doc_id")).agg(count(lit(1)).as("n_d"))
 
-    var state = base.join(nDoc, Seq("doc_id"))
-      .select(col("doc_id"), col("sid"), col("outw"), col("n_d"),
-        (lit(1.0) / col("n_d")).as("rank"))
-      .localCheckpoint(true)
-
-    var it = 0
-    while (it < iters) {
+    // a fixed number of rounds, none measured: each state is a lazy
+    // checkpoint, and the skeleton counts the last one
+    val (state, _, _) = Superstep.iterate(docs.sparkSession,
+      base.join(nDoc, Seq("doc_id"))
+        .select(col("doc_id"), col("sid"), col("outw"), col("n_d"),
+          (lit(1.0) / col("n_d")).as("rank"))
+        .localCheckpoint(true), iters) { state =>
       val contrib = edges
         .join(state.select(col("doc_id"), col("sid").as("src"),
           col("outw"), col("rank")).hint("shuffle_hash"),
@@ -93,16 +98,14 @@ object TextRank {
       val dang = state.groupBy(col("doc_id"))
         .agg(sum(when(col("outw") === 0L, col("rank"))
           .otherwise(lit(0.0))).as("dang"))
-      val next = state
+      Superstep.Step(state
         .join(contrib.hint("shuffle_hash"), Seq("doc_id", "sid"), "left")
         .join(dang.hint("shuffle_hash"), Seq("doc_id"))
         .select(col("doc_id"), col("sid"), col("outw"), col("n_d"),
           ((lit(1.0) - lit(0.85)) / col("n_d") + lit(0.85) *
             (coalesce(col("contrib"), lit(0.0)) + col("dang") / col("n_d")))
             .as("rank"))
-        .localCheckpoint(it == iters - 1) // eager only on the last round
-      state = next
-      it += 1
+        .localCheckpoint(false))
     }
 
     val ranks = state.select(col("doc_id"), col("sid"),

@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algo.{Betweenness, BowTie, ConnectedComponents, Hyperball, KTruss, Katz,
-  LabelPropagation, PageRank, Scc, ShortestPaths, Superstep}
+import graft.algo.{Betweenness, BowTie, ConnectedComponents, Coreness, Densest, Hyperball,
+  KCore, KTruss, Katz, LabelPropagation, Matching, Mis, Mst, PageRank, Scc, ShortestPaths,
+  Superstep, Topology, Trussness}
 import graft.graph.GraphOps
 
 /** Storage lifetime of the superstep algorithms: after a run, the only
@@ -27,9 +28,31 @@ class CheckpointLifetimeSpec extends AnyFunSuite {
   private lazy val symCycle: DataFrame = GraphOps.symmetrize(cycle)
   private lazy val path: DataFrame = (0L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
   private lazy val symPath: DataFrame = GraphOps.symmetrize(path)
+  /** Triangles (i, i+1, i+2) along the path: trussness refines from the ends. */
+  private lazy val strip: DataFrame =
+    path.unionAll((0L until 63L).map(i => (i, i + 2)).toDF("src", "dst"))
+  /** Edge i → i+1 weighs the trailing zeros of i+1: Borůvka merges pairs,
+    * then quads, … — six rounds.
+    */
+  private lazy val ruler: DataFrame =
+    (0L until 64L).map(i => (i, i + 1, java.lang.Long.numberOfTrailingZeros(i + 1)))
+      .toDF("src", "dst", "weight")
 
   /** Hop distance from vertex 0 on the cycle. */
   private def hops(i: Long): Long = math.min(i, n - i)
+
+  /** The cycle's neighbours of vertex i. */
+  private def around(i: Long): Set[Long] = Set((i + 1) % n, (i + n - 1) % n)
+
+  /** (u, v) rows of a matching on the cycle: no vertex twice, and every
+    * cycle edge touches a matched vertex.
+    */
+  private def assertMaximalMatching(name: String, rows: Set[Row]): Unit = {
+    val ends = rows.toSeq.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
+    assert(ends.distinct.size == ends.size, s"$name: a vertex is matched twice")
+    assert((0L until n).forall(i => ends.contains(i) || ends.contains((i + 1) % n)),
+      s"$name: an edge touches no matched vertex")
+  }
 
   /** Edge i → i+1 at time i: a time-respecting walk takes them in order. */
   private def timed(e: DataFrame): DataFrame = e.withColumn("ts", col("src"))
@@ -195,9 +218,57 @@ class CheckpointLifetimeSpec extends AnyFunSuite {
     assert(rows == (0L until n).map(Row(_, 0L)).toSet)
   }
 
-  // each run needs far more than two rounds on the 64-hop path; the
-  // function gets the path's edges checkpointed on src, made before the
-  // pinned set is snapshot
+  test("MIS leaves only what its set reads; independent and maximal on the cycle") {
+    val Seq(rows) = lifetime("MIS") {
+      Seq(Mis.run(spark, symCycle, numPartitions = 4))
+    }
+    val in = rows.map(_.getLong(0))
+    assert(in.forall(v => !around(v).exists(in)), "two members are adjacent")
+    assert((0L until n).forall(v => in(v) || around(v).exists(in)), "not maximal")
+  }
+
+  test("greedy coloring leaves only what its colors read; proper on the cycle") {
+    val Seq(rows) = lifetime("coloring") {
+      Seq(Mis.coloring(spark, symCycle, numPartitions = 4))
+    }
+    val color = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(color.keySet == (0L until n).toSet)
+    assert((0L until n).forall(i => color(i) != color((i + 1) % n)))
+  }
+
+  test("Matching.run leaves only what its matching reads; vertex-disjoint and maximal") {
+    val Seq(rows) = lifetime("Matching.run") {
+      Seq(Matching.run(spark, symCycle, numPartitions = 4))
+    }
+    assertMaximalMatching("Matching.run", rows)
+  }
+
+  test("Matching.runWeighted leaves only what its matching reads; vertex-disjoint and maximal") {
+    val Seq(rows) = lifetime("Matching.runWeighted") {
+      Seq(Matching.runWeighted(spark, cycle.withColumn("weight", col("src") % 3),
+        numPartitions = 4))
+    }
+    assertMaximalMatching("Matching.runWeighted", rows)
+  }
+
+  test("MST leaves only what its forest reads; |V| − 1 edges, the heaviest dropped") {
+    val Seq(rows) = lifetime("MST") {
+      Seq(Mst.run(spark, cycle.withColumn("weight", col("src")), numPartitions = 4))
+    }
+    // edge i → i+1 weighs i: the forest is every edge but (0, 31)
+    assert(rows == (0L until n - 1L).map(i => Row(i, i + 1, i)).toSet)
+  }
+
+  test("Topology.layers leaves only what its layering reads; path vertex i in layer i") {
+    val Seq(rows) = lifetime("Topology.layers") {
+      Seq(Topology.layers(spark, path, numPartitions = 4))
+    }
+    assert(rows == (0L to 64L).map(i => Row(i, i)).toSet)
+  }
+
+  // each run needs more rounds than it is given; the function gets the
+  // 64-hop path's edges checkpointed on src, made before the pinned set
+  // is snapshot
   for ((name, run) <- Seq[(String, DataFrame => Any)](
     "ShortestPaths.run" -> (_ =>
       ShortestPaths.run(spark, symPath, Seq(0L), numPartitions = 4, maxIter = 2)),
@@ -214,7 +285,27 @@ class CheckpointLifetimeSpec extends AnyFunSuite {
       BowTie.reachableFrom(spark, edges, Seq(0L).toDF("id"), 4, maxIter = 2)),
     "Betweenness" -> (_ =>
       Betweenness.run(spark, symPath, Seq(0L), numPartitions = 4, maxIter = 2)),
-    "SCC" -> (_ => Scc.run(spark, path, numPartitions = 4, maxIter = 2))
+    "SCC" -> (_ => Scc.run(spark, path, numPartitions = 4, maxIter = 2)),
+    // peeling the path from both ends: one vertex per end and round
+    "KCore.run" -> (_ => KCore.run(spark, symPath, k = 2, numPartitions = 4, maxIter = 2)),
+    "KCore.sCore" -> (_ =>
+      KCore.sCore(spark, symPath.withColumn("weight", lit(1L)), 2L, numPartitions = 4,
+        maxIter = 2)),
+    "Coreness" -> (_ => Coreness.run(spark, symPath, numPartitions = 4, maxIter = 2)),
+    "Trussness" -> (_ => Trussness.run(spark, strip, numPartitions = 4, maxIter = 1)),
+    "KTruss" -> (_ => KTruss.run(spark, symPath, k = 3, numPartitions = 4, maxIter = 1)),
+    // at (1+ε) = 1.001 every round drops only the two path ends
+    "Densest" -> (_ =>
+      Densest.run(spark, path, pNum = 1001, pDen = 1000, numPartitions = 4, maxIter = 2)),
+    "Topology.layers" -> (_ => Topology.layers(spark, path, numPartitions = 4, maxIter = 2)),
+    "Mis.run" -> (_ => Mis.run(spark, symPath, numPartitions = 4, maxIter = 1)),
+    "Mis.coloring" -> (_ => Mis.coloring(spark, symPath, numPartitions = 4, maxIter = 1)),
+    "Matching.run" -> (_ => Matching.run(spark, path, numPartitions = 4, maxIter = 1)),
+    // weight = src: each round matches only the heaviest live edge
+    "Matching.runWeighted" -> (_ =>
+      Matching.runWeighted(spark, path.withColumn("weight", col("src")), numPartitions = 4,
+        maxIter = 2)),
+    "Mst.run" -> (_ => Mst.run(spark, ruler, numPartitions = 4, maxIter = 2))
   )) test(s"$name's cap stop raises IllegalStateException and leaves nothing pinned") {
     val edges = onSrc(path)
     nothingLeftAfterThrow(name)(run(edges))

@@ -7,7 +7,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, expr, lit, spark_partition_id, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.algo.{BowTie, ConnectedComponents, LabelPropagation, Superstep}
+import graft.algo.{BowTie, ConnectedComponents, LabelPropagation, Matching, Mis, Mst, Superstep,
+  Topology}
 import graft.graph.GraphOps
 
 /** The superstep skeleton's stopping, resume and storage contract,
@@ -180,5 +181,56 @@ class SuperstepSpec extends AnyFunSuite {
         BowTie.expand(path, _, _))
     }
     assert(e.getMessage.contains("raise maxIter"))
+  }
+
+  test("peel unions each round's winners, stops on a stall or the cap, runs an empty start once") {
+    val ids = Superstep.freshCheckpoint(spark.range(10).toDF("id"), eager = true)
+    val lives = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // round r wins the ids below 3r: {0,1,2}, {3,4,5}, {6,7,8}, {9}
+    def thirds(live: DataFrame, r: Int) = {
+      lives += live
+      val won = Superstep.freshCheckpoint(live.filter(col("id") < 3 * r), eager = true)
+      (won.withColumn("round", lit(r.toLong)),
+        Superstep.freshCheckpoint(live.join(won, Seq("id"), "left_anti"), eager = true))
+    }
+    val out = Superstep.peel(spark, ids, 4, "test", "hint")(thirds)
+    assert(pairs(out, "round") == (0L until 10L).map(i => (i, i / 3 + 1)).toSet)
+    // each round frees the live set it replaced; the caller's start survives
+    assert(lives.size == 4 && pinned(ids) && lives.tail.forall(!pinned(_)))
+
+    val cap = intercept[IllegalStateException] {
+      Superstep.peel(spark, ids, 3, "test", "hint")(thirds)
+    }
+    assert(cap.getMessage == "test did not settle within 3 rounds — raise maxIter")
+
+    val stall = intercept[IllegalArgumentException] {
+      Superstep.peel(spark, ids, 9, "test", "no winner")((live, _) =>
+        (live.filter(lit(false)).withColumn("round", lit(0L)), live))
+    }
+    assert(stall.getMessage.contains("test round 1 made no progress (10 live rows): no winner"))
+
+    var rounds = 0
+    val empty = Superstep.freshCheckpoint(spark.range(0).toDF("id"), eager = true)
+    val none = Superstep.peel(spark, empty, 9, "test", "hint") {
+      (live, r) => rounds += 1; thirds(live, r)
+    }
+    assert(rounds == 1 && none.isEmpty && none.columns.toSeq == Seq("id", "round"))
+  }
+
+  test("the peel operators return no rows, with their columns, on a self-loop-only graph") {
+    val loops = Seq((1L, 1L), (2L, 2L)).toDF("src", "dst")
+    val weighted = loops.withColumn("weight", lit(1L))
+    for ((name, out, columns) <- Seq(
+      ("Topology.layers", Topology.layers(spark, loops, numPartitions = 2), Seq("id", "layer")),
+      ("Mis.run", Mis.run(spark, loops, numPartitions = 2), Seq("id", "round")),
+      ("Mis.coloring", Mis.coloring(spark, loops, numPartitions = 2), Seq("id", "color")),
+      ("Matching.run", Matching.run(spark, loops, numPartitions = 2), Seq("u", "v", "round")),
+      ("Matching.runWeighted", Matching.runWeighted(spark, weighted, numPartitions = 2),
+        Seq("u", "v", "w", "round")),
+      ("Mst.run", Mst.run(spark, weighted, numPartitions = 2), Seq("u", "v", "weight"))
+    )) {
+      assert(out.isEmpty, name)
+      assert(out.columns.toSeq == columns, name)
+    }
   }
 }
